@@ -11,7 +11,9 @@ Scale notes:
   it the plan doubles per iteration and the driver OOMs on planning)
 - convergence is detected with a one-action (count, xor-of-hashes)
   fingerprint of the edge set — no exceptAll anti-join per round
-- node ids are longs (hash or dense ids); callers map strings first
+- ``min_id_components`` is the one entry point (KG canonicalization,
+  dedup clustering, ``connected_components``): integral ids run the
+  loop directly, other ids are mapped to injective longs first
 """
 
 from __future__ import annotations
@@ -107,10 +109,98 @@ def _driver_union_find(pairs) -> list:
     return [(n, find(n)) for n in parent]
 
 
-#: below this many distinct edges the distributed star loop is pure
-#: overhead (each round is several shuffle jobs); a driver union-find
-#: answers in milliseconds. Alias vocabularies sit far under this.
+#: below this many pairs the distributed star loop is pure overhead
+#: (each round is several shuffle jobs); a driver union-find answers in
+#: milliseconds. Alias vocabularies sit far under this.
 DRIVER_CC_THRESHOLD = 100_000
+
+
+def _star_components(e: DataFrame, nodes: DataFrame, max_iter: int) -> DataFrame:
+    """edges(u, v: long) + nodes(node: long) -> (node, component) for
+    every node, component = min node id in its component (a node on no
+    u != v edge is its own component)."""
+    prev = None
+    for _ in range(max_iter):
+        # lazy checkpoint: the fingerprint action below both materializes
+        # the round's result and measures convergence — one job per
+        # round instead of two (eager-checkpoint + fingerprint)
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        fp = _fingerprint(e)
+        if fp == prev:
+            break
+        prev = fp
+    # Converged star graphs: every edge is (node, root); roots appear
+    # only on the v side.
+    assign = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+    roots = nodes.join(assign.select("node"), "node", "left_anti").select(
+        "node", F.col("node").alias("component"))
+    return assign.union(roots).dropDuplicates(["node"])
+
+
+def min_id_components(
+    pairs: DataFrame,
+    a: str,
+    b: str,
+    *,
+    driver_threshold: int = DRIVER_CC_THRESHOLD,
+    max_iter: int = 30,
+) -> DataFrame:
+    """pairs(a, b) -> (id, rep): one row per distinct id in either
+    column, ``rep`` = the smallest id in that id's connected component
+    in the id type's native order. A self-pair ``(x, x)`` only
+    registers ``x``. Ids must be non-null; ``pairs`` should be cheap to
+    re-scan (checkpointed or a small plan) — it is counted, then read
+    again.
+
+    Size-gated on one ``pairs.count()``: at or below
+    ``driver_threshold`` pairs a driver union-find over the native ids
+    answers (one collect + one Arrow frame instead of ~6
+    shuffle/checkpoint jobs; python ``<`` on longs/UTF-8 strings orders
+    exactly like Spark). Above it the distributed star loop runs:
+    integral ids are already injective longs and go straight in; other
+    ids are mapped through ``injective_node_ids`` and the smallest
+    natural id per component is kept, so the arbitrary longs never
+    surface. Pass ``driver_threshold=0`` to force the distributed
+    path."""
+    from pyspark.sql.types import IntegralType, StructField, StructType
+
+    id_type = pairs.schema[a].dataType
+    if pairs.count() <= driver_threshold:
+        # Arrow path (pandas), not a pickled list: a pickled-list
+        # createDataFrame needs python workers on EVERY downstream
+        # materialization (measured fork storms mid-pipeline); Arrow
+        # batches decode JVM-side.
+        import pandas as pd
+
+        pdf = pd.DataFrame(
+            _driver_union_find(pairs.select(a, b).collect()),
+            columns=["id", "rep"], dtype=object)
+        schema = StructType(
+            [StructField("id", id_type), StructField("rep", id_type)])
+        return pairs.sparkSession.createDataFrame(pdf, schema=schema)
+
+    ids = (
+        pairs.select(F.col(a).alias("id"))
+        .union(pairs.select(F.col(b).alias("id")))
+        .distinct()
+    )
+    if isinstance(id_type, IntegralType):
+        edges = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
+        return _star_components(
+            edges, ids.select(F.col("id").alias("node")), max_iter,
+        ).select(F.col("node").alias("id"), F.col("component").alias("rep"))
+    node_map = injective_node_ids(ids, "id")
+    edges = (
+        pairs.join(node_map.select(F.col("id").alias(a),
+                                   F.col("node").alias("u")), a)
+        .join(node_map.select(F.col("id").alias(b),
+                              F.col("node").alias("v")), b)
+        .select("u", "v")
+    )
+    with_comp = node_map.join(
+        _star_components(edges, node_map.select("node"), max_iter), "node")
+    reps = with_comp.groupBy("component").agg(F.min("id").alias("rep"))
+    return with_comp.join(reps, "component").select("id", "rep")
 
 
 def connected_components(
@@ -126,49 +216,18 @@ def connected_components(
     node that appears in at least one edge; isolated nodes are the
     caller's coalesce.
 
-    Size-gated: at or below ``driver_threshold`` distinct edges the
-    component assignment is computed with a driver-side union-find
-    (dim-scale sameAs graphs — the common KG-canonicalization case);
-    above it the O(log^2 n) distributed star loop runs. Pass
-    ``driver_threshold=0`` to force the distributed path."""
-    spark = edges.sparkSession
+    Size-gated (``min_id_components``): at or below
+    ``driver_threshold`` distinct edges the component assignment is
+    computed with a driver-side union-find (dim-scale sameAs graphs —
+    the common KG-canonicalization case); above it the O(log^2 n)
+    distributed star loop runs. Pass ``driver_threshold=0`` to force
+    the distributed path."""
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
-    n_edges = e.count()
-    if n_edges == 0:
-        return spark.createDataFrame([], "node long, component long")
-    if n_edges <= driver_threshold:
-        assignments = _driver_union_find(
-            (r["u"], r["v"]) for r in e.collect()
-        )
-        # Arrow path (pandas), not a pickled list: a pickled-list
-        # createDataFrame needs python workers on EVERY downstream
-        # materialization (measured fork storms mid-pipeline); Arrow
-        # batches decode JVM-side.
-        import pandas as pd
-
-        pdf = pd.DataFrame(assignments, columns=["node", "component"]).astype(
-            "int64")
-        return spark.createDataFrame(pdf, schema="node long, component long")
-    prev = None
-    for _ in range(max_iter):
-        # lazy checkpoint: the fingerprint action below both materializes
-        # the round's result and measures convergence — one job per
-        # round instead of two (eager-checkpoint + fingerprint)
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        fp = _fingerprint(e)
-        if fp == prev:
-            break
-        prev = fp
-    # Converged star graphs: every edge is (node, root); roots appear
-    # only on the v side.
-    nodes = _symmetrize(e).select("u").distinct()
-    assign = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = nodes.join(
-        assign.select(F.col("node").alias("u")), "u", "left_anti"
-    ).select(F.col("u").alias("node"), F.col("u").alias("component"))
-    return assign.union(roots).dropDuplicates(["node"])
+    return min_id_components(
+        e, "u", "v", driver_threshold=driver_threshold, max_iter=max_iter,
+    ).select(F.col("id").alias("node"), F.col("rep").alias("component"))

@@ -197,66 +197,15 @@ def simhash_dup_pairs(
 
 def _cc_assignments(pairs: DataFrame, id_col: str) -> DataFrame:
     """(id, _rep) for every id appearing in a near-dup pair: connected
-    components over collision-free injective longs, representative =
-    min id per component. ``pairs`` must already be materialized
-    (checkpointed) by the caller — every frame here references it
-    several times. The reps join is size-gated on the member count
-    (an upper bound on cluster count): at web scale duplicates are
-    30-50% of the corpus, so an unconditional broadcast would OOM.
+    components with representative = min id per component
+    (``canon.components.min_id_components`` — driver union-find at dim
+    scale, collision-free injective-long star loop above its gate).
+    ``pairs`` must already be materialized (checkpointed) by the
+    caller — it is counted and then read again."""
+    from ..canon.components import min_id_components
 
-    Size-gated like connected_components itself (r6): at or below
-    ``DRIVER_CC_THRESHOLD`` pairs the whole assignment runs as one
-    driver union-find over the NATIVE ids (collect + Arrow frame) —
-    the distributed path spends ~8 dim-scale shuffle/checkpoint jobs
-    (injective-id checkpoint + count + two mapping joins + CC + reps
-    join) deciding clusters a few thousand pairs define, and the
-    union-by-min union-find returns the identical min-id-per-component
-    answer (python `<` on longs/UTF-8 strings orders exactly like
-    Spark). Above the gate the distributed path is unchanged."""
-    from ..canon import connected_components
-    from ..canon.components import (
-        DRIVER_CC_THRESHOLD,
-        _driver_union_find,
-        injective_node_ids,
-    )
-    from .endpoints import BROADCAST_THRESHOLD_ROWS
-
-    n_pairs = pairs.count()  # pairs checkpointed — near-free
-    if n_pairs <= DRIVER_CC_THRESHOLD:
-        import pandas as pd
-
-        comp = dict(_driver_union_find(
-            (r["id_a"], r["id_b"]) for r in pairs.collect()
-        ))
-        pdf = pd.DataFrame(
-            sorted(comp.items()), columns=[id_col, "_rep"])
-        spark = pairs.sparkSession
-        id_type = pairs.schema["id_a"].dataType.simpleString()
-        if pdf.empty:
-            pdf = pdf.astype(object)
-        return spark.createDataFrame(
-            pdf, schema=f"{id_col} {id_type}, _rep {id_type}")
-
-    members = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    node_map = injective_node_ids(members, id_col)
-    n_members = node_map.count()  # pairs checkpointed — near-free
-    edges = (
-        pairs.join(node_map.select(F.col(id_col).alias("id_a"),
-                                   F.col("node").alias("u")), "id_a")
-        .join(node_map.select(F.col(id_col).alias("id_b"),
-                              F.col("node").alias("v")), "id_b")
-        .select("u", "v")
-    )
-    cc = connected_components(edges)
-    with_comp = node_map.join(cc, "node")
-    reps = with_comp.groupBy("component").agg(F.min(id_col).alias("_rep"))
-    if n_members <= BROADCAST_THRESHOLD_ROWS:
-        reps = F.broadcast(reps)
-    return with_comp.join(reps, "component").select(id_col, F.col("_rep"))
+    return min_id_components(pairs, "id_a", "id_b").select(
+        F.col("id").alias(id_col), F.col("rep").alias("_rep"))
 
 
 def dedup_assignments(

@@ -7,7 +7,7 @@ documents(doc_id, spans) ->
      MinHash-LSH candidate blocking against canonical names
   4. canonicalization: connected components (large-star/small-star)
      over the surface<->canonical sameAs graph; component
-     representative = lexicographically smallest canonical id
+     representative = smallest canonical id
   5. dense node-ID assignment + label/reltype registries
   6. endpoint resolution (broadcast join) -> edges
   7. materialize nodes/edges/triples + per-stage lineage; per-predicate
@@ -26,7 +26,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..canon import connected_components
+from ..canon.components import DRIVER_CC_THRESHOLD, min_id_components
 from ..extract import extract_mentions, validate_span_sequences
 from ..ids import build_node_registry
 from ..link import (
@@ -113,92 +113,37 @@ def _coded_dim(df: DataFrame, col: str, out_col: str, code_col: str) -> DataFram
 def canonicalize(
     aliases: DataFrame,
     *,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_CC_THRESHOLD,
 ) -> DataFrame:
-    """Connected components over the surface<->canonical bipartite
-    sameAs graph; returns (canonical_id -> canon_id) remap where
-    canon_id is the smallest canonical id in the component.
+    """Connected components over the surface<->canonical sameAs graph;
+    returns the (canonical_id -> canon_id) remap where canon_id is the
+    smallest canonical id in the component, one row per distinct
+    non-null canonical id.
 
-    Size-gated like connected_components itself: at or below
-    ``driver_threshold`` alias rows the whole canonicalization runs as
-    a driver union-find over the tagged strings (one collect + one
-    Arrow frame instead of ~6 shuffle/checkpoint jobs — alias
-    dictionaries are dim-scale in the common case and the fixed job
-    cost dominated the measured stage). Above the gate, the
-    distributed path: CC node ids are collision-free injective longs
-    over the tagged-string vocabulary (bare xxhash64 has a ~50%
-    birthday collision at ~5e9 distinct ids; one collision would weld
-    two entities) — see canon.components.injective_node_ids."""
-    from ..canon.components import _driver_union_find, injective_node_ids
+    Every id is paired with the smallest canonical id sharing its
+    surface: that graph holds only canonical ids and has exactly the
+    bipartite graph's components, so ``min_id_components`` (one size
+    gate: driver union-find vs distributed star loop) answers directly
+    on native ids. Null contract: a row with a null ``canonical_id`` is
+    dropped, and a null ``surface`` links nothing (its id only
+    registers itself) — null is not a shared surface.
 
-    n_aliases = aliases.count()
-    if n_aliases <= driver_threshold:
-        import pandas as pd
-
-        # str() everywhere a tag is built so non-string canonical ids
-        # work on this branch too; the min is taken over NATIVE values
-        # (numeric order for numeric ids) and only rendered as string
-        # at the end — mirroring the distributed branch's cast-after-min
-        rows = aliases.select("surface", "canonical_id").collect()
-        pairs = [("s:" + str(r["surface"]), "c:" + str(r["canonical_id"]))
-                 for r in rows]
-        comp_of = dict(_driver_union_find(pairs))
-        canon_ids = sorted({r["canonical_id"] for r in rows})
-        comp_min: dict = {}
-        for cid in canon_ids:
-            key = "c:" + str(cid)
-            root = comp_of.get(key, key)
-            prev = comp_min.get(root)
-            if prev is None or cid < prev:
-                comp_min[root] = cid
-        remap = [(str(cid),
-                  str(comp_min[comp_of.get("c:" + str(cid),
-                                           "c:" + str(cid))]))
-                 for cid in canon_ids]
-        pdf = pd.DataFrame(remap or [("", "")],
-                           columns=["canonical_id", "canon_id"])
-        if not remap:
-            pdf = pdf.iloc[0:0]
-        return aliases.sparkSession.createDataFrame(
-            pdf, schema="canonical_id string, canon_id string")
-
-    tagged = aliases.select(
-        F.concat(F.lit("s:"), "surface").alias("_a"),
-        F.concat(F.lit("c:"), "canonical_id").alias("_b"),
+    Both gate branches emit STRING ids (matching build_alias_dim): the
+    min is taken in the id's native order and only then rendered, so a
+    numeric canonical_id is never compared as a string and the remap
+    join in build_graph never coerces 64-bit ids through double."""
+    cid = F.col("canonical_id")
+    pairs = aliases.filter(cid.isNotNull()).select(
+        cid,
+        F.when(F.col("surface").isNull(), cid)
+        .otherwise(F.min(cid).over(Window.partitionBy("surface")))
+        .alias("_min"),
     )
-    vocab = tagged.select(F.col("_a").alias("_t")).union(
-        tagged.select(F.col("_b").alias("_t"))
-    )
-    node_map = injective_node_ids(vocab, "_t")
-    edges = (
-        tagged.join(node_map.select(F.col("_t").alias("_a"),
-                                    F.col("node").alias("u")), "_a")
-        .join(node_map.select(F.col("_t").alias("_b"),
-                              F.col("node").alias("v")), "_b")
-        .select("u", "v")
-    )
-    cc = connected_components(edges, "u", "v")
-    canon_nodes = aliases.select("canonical_id").distinct().withColumn(
-        "_t", F.concat(F.lit("c:"), "canonical_id")
-    )
-    with_comp = (
-        canon_nodes.join(node_map, "_t")
-        .join(cc, "node", "left")
-        .withColumn("component", F.coalesce("component", "node"))
-    )
-    reps = with_comp.groupBy("component").agg(
-        F.min("canonical_id").alias("canon_id")
-    )
-    # Both gate branches emit STRING ids (the driver branch always
-    # did via its explicit schema; build_alias_dim does on both of its
-    # paths) — cast AFTER the min so a numeric canonical_id is still
-    # picked by native ordering and only rendered as string. Without
-    # this, the remap join in build_graph compares the dim's string
-    # cid against a long canon column and Spark coerces both to
-    # double, welding 64-bit ids that differ only above 2^53.
-    return with_comp.join(reps, "component").select(
-        F.col("canonical_id").cast("string").alias("canonical_id"),
-        F.col("canon_id").cast("string").alias("canon_id"),
+    return min_id_components(
+        pairs, "canonical_id", "_min", driver_threshold=driver_threshold,
+    ).select(
+        F.col("id").cast("string").alias("canonical_id"),
+        F.col("rep").cast("string").alias("canon_id"),
     )
 
 
@@ -233,24 +178,11 @@ def build_graph(
     after consuming the results in a long-lived session."""
     from ..cache import PinScope, pin
 
-    import os as _os
-    _prof = bool(_os.environ.get("SPARK_GRAFT_PROFILE_STAGES"))
-
-    def _tick(name, t0):
-        if _prof:
-            import sys as _sys
-            import time as _time
-            print(f"[stage-profile] {name}: {_time.time() - t0:.3f}s",
-                  file=_sys.stderr)
-
-    import time as _time_mod
     scope = PinScope()
-    _t = _time_mod.time()
     fp = (
         GraphCatalog.fingerprint_df(documents.select("doc_id", "spans"))
         if catalog is not None else None
     )
-    _tick("fingerprint", _t)
 
     # Full-resume short circuit: if the FINAL stage already ran against
     # this exact input and every output table exists, the whole build
@@ -297,12 +229,10 @@ def build_graph(
     mentions = extract_mentions(docs)
     staged = catalog is not None and checkpoint_stages
     if staged:
-        _t = _time_mod.time()
         if not catalog.is_complete("mentions", fp):
             catalog.write("mentions", mentions, stage="mentions",
                           input_fingerprint=fp)
         mentions = catalog.read("mentions")
-        _tick("mentions_stage", _t)
     else:
         mentions = pin(mentions)
     scope.__enter__()
@@ -319,9 +249,7 @@ def build_graph(
         linked0 = link_mentions(mentions, dim=dim0)
         if not staged:
             linked0 = pin(linked0)
-        _t = _time_mod.time()
         extra = _lsh_extra_mappings_scoped(linked0, aliases, lsh_threshold)
-        _tick("lsh_extra", _t)
         # No leftovers -> the first join IS the final linking. Leftovers ->
         # patch only the null-cid rows from the (tiny, pinned) extra
         # mappings instead of re-linking the whole mention stream.
@@ -335,10 +263,8 @@ def build_graph(
         # 4. canonicalization via connected components. The remap has one
         # row per canonical entity — broadcast only while it provably fits
         # (billions of entities at 100x must shuffle-join instead).
-        _t = _time_mod.time()
         remap = pin(canonicalize(aliases_aug))
         n_remap = remap.count()
-        _tick("canonicalize", _t)
 
         def _mb(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if n_remap <= BROADCAST_THRESHOLD_ROWS else df
@@ -396,9 +322,7 @@ def build_graph(
         registry = pin(build_node_registry(
             node_ext, ["ext_id"], ["label", "ext_id"]
         ))
-        _t = _time_mod.time()
         n_registry = registry.count()  # warms the persist; feeds the join gate
-        _tick("registry_count", _t)
         nodes = node_ext.join(registry, "ext_id").select("internal_id", "label", "ext_id")
 
         # label / reltype registries (tiny dims, mirror header tokens)
@@ -437,17 +361,6 @@ def build_graph(
 
         if catalog is not None:
             if not catalog.is_complete("build_graph", fp):
-                if _prof:
-                    # Debug decomposition: force-materialize the frames
-                    # that ride the write walls, timing each (stderr).
-                    # Not a production path — counts add whole jobs.
-                    for _nm, _frame in (("triples_pin", triples),
-                                        ("distinct_triples", distinct_triples),
-                                        ("edges_resolve", edges),
-                                        ("nodes_resolve", nodes)):
-                        _t0 = _time_mod.time()
-                        _frame.count()
-                        _tick(_nm, _t0)
                 # The four table writes are independent jobs over
                 # already-pinned inputs: submit them concurrently so
                 # each job's task tail is back-filled by the next

@@ -7,7 +7,5 @@ from .stream import (  # noqa: F401
 )
 from .stateful import (  # noqa: F401
     dedup_stream,
-    dedup_stream_tws,
     sessionize_stream,
-    sessionize_stream_tws,
 )

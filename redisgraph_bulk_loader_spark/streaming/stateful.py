@@ -101,77 +101,8 @@ def sessionize_stream(
     )
 
 
-def sessionize_stream_tws(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Same cross-batch sessionization on Spark 4's successor stateful
-    API, ``transformWithStateInPandas`` (StatefulProcessor + typed
-    ValueState, SPARK-46815): per-user ValueState carries (last event
-    time, session count, event count) across micro-batches. Output and
-    state semantics are identical to ``sessionize_stream`` (including
-    the ``user_col``-derived output key field) — the
-    applyInPandasWithState form remains for API parity; this is the
-    forward-compatible path (the old API is soft-deprecated in
-    Spark 4)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_minutes * 60 * 1_000_000
-    out_schema, _key_field = _session_output_schema(events, user_col)
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "sess", "last_us long, n_sessions long, n_events long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                last_us, n_sessions, n_events = self._state.get()
-            else:
-                last_us, n_sessions, n_events = None, 0, 0
-            # buffer the whole micro-batch before sorting (see fn in
-            # sessionize_stream — per-chunk sorting misorders events
-            # across Arrow chunk boundaries)
-            chunks = [pdf[ts_col] for pdf in rows if len(pdf)]
-            if chunks:
-                us = (pd.concat(chunks).astype("int64") // 1000).sort_values()
-                prev = us.shift(1)
-                if last_us is not None:
-                    prev.iloc[0] = last_us
-                gaps_new = ((us - prev) > gap_us) | prev.isna()
-                n_sessions += int(gaps_new.sum())
-                n_events += int(len(us))
-                last_us = int(us.iloc[-1])
-            self._state.update((last_us, n_sessions, n_events))
-            yield pd.DataFrame(
-                {
-                    user_col: [key[0]],
-                    "n_sessions": [n_sessions],
-                    "n_events": [n_events],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(user_col).transformWithStateInPandas(
-        statefulProcessor=_SessionProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def _dedup_key(text_col, key_col):
-    """Dedup-key expression shared by both streaming dedup variants:
+    """Dedup-key expression for ``dedup_stream``:
     ``doc_fingerprint`` of ``text_col`` by default (the batch
     ``exact_dedup`` key), or the caller's ``key_col`` Column for
     non-flat-text inputs (e.g. ``md5(to_json(struct(spans)))`` for
@@ -263,69 +194,4 @@ def dedup_stream(
     )
     return keyed.groupBy("_fp").applyInPandasWithState(
         fn, out_schema, "seen long", "append", timeout
-    )
-
-
-def dedup_stream_tws(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    key_col=None,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """``dedup_stream`` on Spark 4's successor stateful API
-    (``transformWithStateInPandas``): same fingerprint key, same
-    min-``id_col``-within-batch / suppress-across-batches semantics.
-    The TTL maps to the API's NATIVE per-state TTL
-    (``getValueState(ttlDurationMs=...)`` under
-    ``timeMode='ProcessingTime'``) instead of a hand-rolled timeout
-    callback — an expired fingerprint is simply absent on its next
-    read, so the content re-emits. The applyInPandasWithState form
-    remains for API parity; this is the forward-compatible path."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import StructType
-
-    in_fields = list(docs.schema.fields)
-    out_schema = StructType(in_fields)
-    cols = [f.name for f in in_fields]
-    ttl = state_ttl_ms
-
-    keyed = docs.withColumn("_fp", _dedup_key(text_col, key_col))
-
-    class _DedupProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", "seen long", ttlDurationMs=ttl)
-
-        def handleInputRows(self, key, rows, timerValues):
-            seen = self._seen.exists()
-            best = None
-            for pdf in rows:
-                if not len(pdf) or seen:
-                    continue
-                # stable sort, not idxmin: argmin is undefined for
-                # object-dtype (string) id columns
-                cand = pdf.sort_values(id_col, kind="mergesort").iloc[0]
-                if best is None or cand[id_col] < best[id_col]:
-                    best = cand
-            # same guard as dedup_stream: only mark seen when content
-            # was emitted once or already had been (ADVICE r5)
-            if seen or best is not None:
-                self._seen.update((1,))
-            if best is not None and not seen:
-                yield pd.DataFrame([best[cols].to_dict()])
-
-        def close(self) -> None:
-            pass
-
-    return keyed.groupBy("_fp").transformWithStateInPandas(
-        statefulProcessor=_DedupProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime" if ttl is not None else "None",
     )

@@ -333,6 +333,75 @@ class TestConnectedComponents:
         assert connected_components(df).count() == 0
 
 
+def _union_find_min(pairs):
+    """Python oracle: {id: smallest id in its component}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+class TestMinIdComponents:
+    """canon.components.min_id_components: the one min-id CC primitive
+    behind connected_components, canonicalize and dedup clustering."""
+
+    @staticmethod
+    def _pairs(id_type):
+        import random
+
+        rnd = random.Random(7)
+        raw = [(rnd.randrange(70), rnd.randrange(70)) for _ in range(90)]
+        raw += [(200, 200), (5, 5)]  # self-pairs: 200 only registers
+        if id_type == "long":
+            return raw
+        # unpadded: "n10" < "n9", so reps must follow string order
+        return [(f"n{a}", f"n{b}") for a, b in raw]
+
+    @pytest.mark.parametrize("id_type", ["long", "string"])
+    @pytest.mark.parametrize("threshold", [None, 0])
+    def test_matches_union_find_oracle(self, spark, id_type, threshold):
+        from redisgraph_bulk_loader_spark.canon.components import (
+            min_id_components,
+        )
+
+        pairs = self._pairs(id_type)
+        df = spark.createDataFrame(pairs, f"a {id_type}, b {id_type}")
+        kw = {} if threshold is None else {"driver_threshold": threshold}
+        out = min_id_components(df, "a", "b", **kw)
+        in_type = df.schema["a"].dataType
+        assert [(f.name, f.dataType) for f in out.schema.fields] == [
+            ("id", in_type), ("rep", in_type)]
+        rows = out.collect()
+        got = {r.id: r.rep for r in rows}
+        assert len(rows) == len(got)  # one row per id
+        assert got == _union_find_min(pairs)
+        self_only = 200 if id_type == "long" else "n200"
+        assert got[self_only] == self_only
+
+    @pytest.mark.parametrize("id_type", ["long", "string"])
+    @pytest.mark.parametrize("threshold", [None, 0])
+    def test_empty_typed_input(self, spark, id_type, threshold):
+        from redisgraph_bulk_loader_spark.canon.components import (
+            min_id_components,
+        )
+
+        df = spark.createDataFrame([], f"a {id_type}, b {id_type}")
+        kw = {} if threshold is None else {"driver_threshold": threshold}
+        out = min_id_components(df, "a", "b", **kw)
+        assert out.collect() == []
+        in_type = df.schema["a"].dataType
+        assert [f.dataType for f in out.schema.fields] == [in_type, in_type]
+
+
 # ---------------------------------------------------------------------------
 # Skew ops
 # ---------------------------------------------------------------------------
@@ -638,6 +707,41 @@ class TestDedupAssignments:
             aliases, driver_threshold=0).collect())
         assert drv == dist
         assert dict(drv)["e5"] == "e1" and dict(drv)["e4"] == "e3"
+
+    def test_canonicalize_null_contract(self, spark):
+        """A null surface links nothing (not one shared "None" surface)
+        and a null canonical_id is dropped — identically on both gate
+        branches."""
+        from redisgraph_bulk_loader_spark.plans.pipeline import canonicalize
+
+        aliases = spark.createDataFrame(
+            [(None, "e1"), (None, "e2"), ("x", "e3"), ("a", None),
+             ("a", "e4")],
+            "surface string, canonical_id string",
+        )
+        for kw in ({}, {"driver_threshold": 0}):
+            remap = {r.canonical_id: r.canon_id
+                     for r in canonicalize(aliases, **kw).collect()}
+            assert remap == {"e1": "e1", "e2": "e2", "e3": "e3",
+                             "e4": "e4"}, kw
+
+    def test_odd_column_names(self, spark):
+        """An id column whose name is not a bare SQL identifier must
+        survive the driver-side cluster frame (its schema is built from
+        the pairs' StructField, not a DDL string)."""
+        from redisgraph_bulk_loader_spark.operators.dedup import (
+            dedup_assignments,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog"),
+             (2, "the quick brown fox jumps over the lazy dog today"),
+             (3, "an entirely different sentence about graphs")],
+            "`doc id` long, text string",
+        )
+        got = {r["doc id"]: r["rep_id"]
+               for r in dedup_assignments(docs, "doc id", "text").collect()}
+        assert got == {1: 1, 2: 1, 3: 3}
 
     def test_link_vocab_gate_strategies_agree(self, spark):
         """link_mentions' resolved-vocabulary broadcast is size-gated;

@@ -9,8 +9,6 @@ import os
 
 from pyspark.sql import functions as F
 
-import pytest
-
 from redisgraph_bulk_loader_spark.streaming import (
     incremental_graph_update,
     stream_events_to_graph,
@@ -188,89 +186,6 @@ class TestPerPartitionLineage:
         assert rec["n_partitions"] == 4
         assert sum(p["rows"] for p in rec["partitions"]) == 1000
         assert all(p["file"].endswith(".parquet") for p in rec["partitions"])
-
-
-try:
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-    _HAS_PROTOBUF = True
-except ImportError:
-    _HAS_PROTOBUF = False
-
-
-class TestTransformWithStateSessionize:
-    @pytest.mark.skipif(
-        not _HAS_PROTOBUF,
-        reason="transformWithStateInPandas needs protobuf (its state-"
-               "server protocol); not installed in this sandbox",
-    )
-    def test_tws_sessions_span_micro_batches(self, spark, tmp_path):
-        """Spark 4 successor API (transformWithStateInPandas +
-        ValueState): same cross-batch semantics as the
-        applyInPandasWithState form — two availableNow runs share a
-        checkpoint, state restores, sessions spanning the boundary are
-        counted once. Requires the RocksDB state store provider."""
-        from datetime import datetime, timedelta
-
-        from redisgraph_bulk_loader_spark.streaming.stateful import (
-            sessionize_stream_tws,
-        )
-
-        prev_provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            base = datetime(2024, 1, 1)
-
-            def ev(uid, minutes):
-                return (uid, base + timedelta(minutes=minutes))
-
-            schema = "user_id long, ts timestamp"
-            src = tmp_path / "tws_src"
-            src.mkdir()
-
-            def run_once():
-                got = {}
-
-                def sink(batch_df, _bid):
-                    for r in batch_df.collect():
-                        got[r.user_id] = (r.n_sessions, r.n_events)
-
-                stream = spark.readStream.schema(schema).parquet(
-                    str(src / "*"))
-                q = (
-                    sessionize_stream_tws(stream, gap_minutes=30)
-                    .writeStream.foreachBatch(sink)
-                    .outputMode("update")
-                    .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-                return got
-
-            spark.createDataFrame([ev(1, 0), ev(1, 10), ev(2, 0)], schema) \
-                .coalesce(1).write.parquet(str(src / "b1"))
-            first = run_once()
-            assert first[1] == (1, 2) and first[2] == (1, 1)
-
-            spark.createDataFrame([ev(1, 20), ev(1, 200), ev(2, 100)],
-                                  schema) \
-                .coalesce(1).write.parquet(str(src / "b2"))
-            second = run_once()
-            assert second[1] == (2, 4)
-            assert second[2] == (2, 2)
-        finally:
-            if prev_provider is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass",
-                    prev_provider)
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass")
 
 
 class TestStreamingKgIngestion:
@@ -487,9 +402,9 @@ class TestSessionizeCustomKeyColumn:
         assert got == {"dev-a": (2, 2), "dev-b": (1, 1)}
 
     def test_tws_schema_derivation(self, spark):
-        """The TWS variant derives the same output schema (execution is
-        dependency-gated; the schema contract is checkable without a
-        stream)."""
+        """The sessionizer's output schema contract is checkable
+        without a stream: the key field keeps user_col's name and
+        type."""
         from redisgraph_bulk_loader_spark.streaming.stateful import (
             _session_output_schema,
         )
@@ -636,107 +551,6 @@ class TestStreamingDedup:
         ).coalesce(1).write.parquet(str(src / "b3"))
         self._run(spark, src, tmp_path / "ckpt", emitted, **kw)
         assert sorted(r[0] for r in emitted) == [1, 50, 99]
-
-
-class TestStreamingDedupTws:
-    def test_tws_plan_and_schema(self, spark, tmp_path):
-        """Plan construction and the output-schema contract need no
-        state-server runtime: output schema == input schema (surviving
-        rows pass through), TTL config accepted."""
-        from redisgraph_bulk_loader_spark.streaming.stateful import (
-            dedup_stream_tws,
-        )
-
-        src = tmp_path / "src"
-        src.mkdir()
-        stream = spark.readStream.schema(
-            "doc_id string, text string").parquet(str(src / "*"))
-        out = dedup_stream_tws(stream, state_ttl_ms=60_000)
-        assert out.isStreaming
-        assert out.schema.simpleString() == \
-            "struct<doc_id:string,text:string>"
-
-    def test_tws_key_col_plan(self, spark, tmp_path):
-        """``key_col`` builds on the TWS twin too (shared _dedup_key):
-        a spans-only input needs no text column at all."""
-        from pyspark.sql import functions as F
-
-        from redisgraph_bulk_loader_spark.streaming.stateful import (
-            dedup_stream_tws,
-        )
-
-        src = tmp_path / "src"
-        src.mkdir()
-        schema = (
-            "doc_id long, spans array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>"
-        )
-        stream = spark.readStream.schema(schema).parquet(str(src / "*"))
-        out = dedup_stream_tws(
-            stream, key_col=F.md5(F.to_json(F.col("spans"))))
-        assert out.isStreaming
-        assert [f.name for f in out.schema.fields] == ["doc_id", "spans"]
-
-    @pytest.mark.skipif(
-        not _HAS_PROTOBUF,
-        reason="transformWithStateInPandas needs protobuf (its state-"
-               "server protocol); not installed in this sandbox",
-    )
-    def test_tws_cross_batch_suppression(self, spark, tmp_path):
-        """Same semantics as TestStreamingDedup on the successor API:
-        min-id survives within a batch, restored state suppresses
-        across availableNow runs. Requires the RocksDB provider."""
-        from redisgraph_bulk_loader_spark.streaming.stateful import (
-            dedup_stream_tws,
-        )
-
-        prev_provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            src = tmp_path / "src"
-            src.mkdir()
-            emitted = []
-
-            def run_once():
-                q = (
-                    dedup_stream_tws(
-                        spark.readStream.schema("doc_id long, text string")
-                        .parquet(str(src / "*")))
-                    .writeStream.foreachBatch(
-                        lambda df, _b: emitted.extend(
-                            r.doc_id for r in df.collect()))
-                    .outputMode("append")
-                    .option("checkpointLocation", str(tmp_path / "ckpt"))
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(120)
-
-            spark.createDataFrame(
-                [(5, "X"), (2, " x  "), (7, "Y")],
-                "doc_id long, text string",
-            ).coalesce(1).write.parquet(str(src / "b1"))
-            run_once()
-            assert sorted(emitted) == [2, 7]
-
-            spark.createDataFrame(
-                [(1, "X"), (9, "Z")], "doc_id long, text string"
-            ).coalesce(1).write.parquet(str(src / "b2"))
-            run_once()
-            assert sorted(emitted) == [2, 7, 9]
-        finally:
-            if prev_provider is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass",
-                    prev_provider)
-            else:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass")
 
 
 class TestStatelessCurationOnStreams:

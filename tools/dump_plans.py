@@ -1,7 +1,17 @@
-"""Dump formatted physical plans of the scale-critical operators to
-PLANS.md — the explain() evidence behind the plan-shape tests in
-tests/test_plans.py. Regenerate: PYTHONPATH=/root/repo python
-tools/dump_plans.py"""
+"""Dump formatted physical plans.
+
+    python tools/dump_plans.py operators <sf_dir>
+        hand-built frames of the scale-critical operators -> PLANS.md,
+        the explain() evidence behind the plan-shape tests in
+        tests/test_plans.py (generated at sf0.001).
+    python tools/dump_plans.py queries <sf_dir> <tag> [names...]
+        __spark_entry__.queries() entries (all when no names are given)
+        -> plans/<tag>/<query>.txt. Plan SHAPE is sf-independent; only
+        AQE runtime decisions differ, and explain() here shows the
+        static plan before execution.
+
+<sf_dir> is a generated testdata directory (documents.parquet,
+orders.parquet, ...)."""
 
 from __future__ import annotations
 
@@ -9,9 +19,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def formatted(df) -> str:
@@ -20,9 +29,8 @@ def formatted(df) -> str:
     )
 
 
-def main():
+def _session():
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -31,6 +39,28 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def dump_queries(spark, sf_dir: str, tag: str, names) -> None:
+    import __spark_entry__ as entrymod
+
+    out_dir = os.path.join(REPO, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    qs = entrymod.queries()
+    for name in names or list(qs):
+        try:
+            txt = formatted(qs[name](spark, sf_dir))
+        except Exception as e:  # noqa: BLE001
+            txt = f"ERROR building plan: {type(e).__name__}: {e}"
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as f:
+            f.write(txt)
+        print(f"wrote {path} ({len(txt)} chars)")
+
+
+def dump_operators(spark, sf_dir: str) -> None:
+    from pyspark.sql import functions as F
 
     from redisgraph_bulk_loader_spark.link import build_alias_dim, link_mentions
     from redisgraph_bulk_loader_spark.operators.dedup import (
@@ -69,7 +99,7 @@ def main():
         [(str(i), i) for i in range(50)], "ext_id string, internal_id long"
     )
     edges = spark.createDataFrame([("1", "2")], "src_id string, dst_id string")
-    docs_t = spark.read.parquet(os.path.join(SF, "documents.parquet"))
+    docs_t = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
     sections = [
         ("Extraction + broadcast alias linking (Arrow batch -> "
@@ -86,9 +116,9 @@ def main():
         ("MinHash-LSH near-dup pairs (banded equi-join; no cartesian "
          "product anywhere)",
          minhash_lsh_dedup_pairs(docs_t, "doc_id", "text", threshold=0.5)),
-        ("Dedup cluster assignment (portable minhash pairs -> CC over "
-         "collision-free injective longs -> size-gated representative "
-         "join; broadcast here because members are under the gate)",
+        ("Dedup cluster assignment (portable minhash pairs -> "
+         "min_id_components: under DRIVER_CC_THRESHOLD pairs a driver "
+         "union-find whose Arrow frame joins back as an ExistingRDD scan)",
          dedup_assignments(docs_t, "doc_id", "text", threshold=0.5,
                            portable=True)),
         ("Alias linking with the vocabulary broadcast gate OFF (the "
@@ -146,18 +176,31 @@ def main():
     out = io.StringIO()
     out.write(
         "# PLANS — formatted physical plans of the scale-critical "
-        "operators\n\nGenerated by tools/dump_plans.py at sf0.001; the "
-        "shapes asserted in\ntests/test_plans.py. Re-generate after "
+        "operators\n\nGenerated by `tools/dump_plans.py operators` at "
+        "sf0.001; the shapes asserted in\ntests/test_plans.py. Re-generate after "
         "changing any operator.\n")
     for title, df in sections:
         out.write(f"\n## {title}\n\n```\n")
         out.write(formatted(df))
         out.write("```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write(out.getvalue())
     print("wrote PLANS.md")
-    spark.stop()
+
+
+def main(argv) -> None:
+    if len(argv) < 2 or argv[0] not in ("operators", "queries") or (
+            argv[0] == "queries" and len(argv) < 3):
+        sys.exit(__doc__)
+    spark = _session()
+    try:
+        if argv[0] == "operators":
+            dump_operators(spark, argv[1])
+        else:
+            dump_queries(spark, argv[1], argv[2], argv[3:])
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
