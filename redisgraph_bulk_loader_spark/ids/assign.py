@@ -119,9 +119,6 @@ def build_node_registry(
     nodes: DataFrame,
     key_cols: List[str],
     order_cols: List[str],
-    *,
-    start: int = 0,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """identifier -> dense internal id mapping with last-wins dedup.
 
@@ -133,8 +130,6 @@ def build_node_registry(
     ordered = assign_dense_ids(
         nodes.select(*dict.fromkeys(key_cols + order_cols)),
         order_cols,
-        start=start,
-        num_partitions=num_partitions,
     )
     w = Window.partitionBy(*key_cols).orderBy(F.col("internal_id").desc())
     return (

@@ -17,6 +17,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+#: the mention columns linking resolves, each to ``<col>_cid``
+SURFACE_COLS = ("subj_surface", "obj_surface")
+
+
 def normalize_surface(col: Column) -> Column:
     """Deterministic surface normalization: trim, collapse whitespace,
     case-fold, strip dots (so "A. Lovelace" ~ "a lovelace"). Pure JVM
@@ -27,77 +31,23 @@ def normalize_surface(col: Column) -> Column:
     return c
 
 
-def _normalize_py(s: str) -> str:
-    """Driver-side twin of normalize_surface (python re). Semantics must
-    match the JVM version; exotic-locale case-folding differences (e.g.
-    Turkish dotted I) would surface as linking misses, not wrong links."""
-    import re as _re
-
-    s = s.strip().lower()
-    s = s.replace(".", "")
-    return _re.sub(r"\s+", " ", s)
-
-
-#: above this many alias rows the driver-side collect+normalize loop
-#: (single-threaded python) loses to the distributed dropDuplicates
-#: path; below it the collect removes a shuffle + broadcast-build.
-COLLECT_DIM_THRESHOLD = 100_000
-
-
-def build_alias_dim(
-    aliases: DataFrame,
-    *,
-    collect_dim: bool | None = None,
-    alias_rows: int | None = None,
-) -> DataFrame:
+def build_alias_dim(aliases: DataFrame) -> DataFrame:
     """Build the normalized broadcast dim (_norm, canonical_id) ONCE per
     run; pass the result to ``link_mentions(dim=...)`` so repeated link
     passes (leftover probe, post-LSH relink) reuse the same broadcast
     instead of rebuilding it — the measured per-run fixed cost.
 
-    ``collect_dim=None`` (auto) gates on size: the driver loop below
-    ``COLLECT_DIM_THRESHOLD`` rows, the distributed min-aggregate path
-    above (a "low millions" alias dict must not run a single-threaded
-    driver loop).
+    Keys go through the same ``normalize_surface`` expression the
+    mention side uses, so a mention spelled exactly like an alias
+    always links. The dim is a lazy aggregate: building it runs no job.
 
     Ambiguous surfaces (two aliases normalizing identically but mapping
     to different canonicals) resolve deterministically to the MINIMUM
-    canonical_id on BOTH gate paths — linking output must not depend on
-    which side of the gate the dictionary falls, and a nondeterministic
-    pick (dropDuplicates keeps an arbitrary row) would also destabilize
-    the resume fingerprint across reruns."""
-    spark = aliases.sparkSession
-    if collect_dim is None:
-        n = alias_rows if alias_rows is not None else aliases.count()
-        collect_dim = n <= COLLECT_DIM_THRESHOLD
-    if collect_dim:
-        # Collecting a small dim to pre-normalize costs the same memory
-        # class as broadcasting it, and removes an aggregation shuffle
-        # plus one broadcast-exchange build from the critical path.
-        # The re-upload goes through pandas/Arrow: a pickled-list
-        # createDataFrame needs python workers on EVERY materialization
-        # of the broadcast (measured ~60s fork storm mid-pipeline at 32
-        # slots), while Arrow batches decode JVM-side.
-        import pandas as pd
-
-        seen = {}
-        for row in aliases.select("surface", "canonical_id").collect():
-            # null surfaces/cids are unusable mappings — skipped here,
-            # and the distributed path's isNotNull filter + min-ignores
-            # -nulls agg drops the same rows (gate-path agreement)
-            if row["surface"] is None or row["canonical_id"] is None:
-                continue
-            key = _normalize_py(row["surface"])
-            cid = row["canonical_id"]
-            if key not in seen or cid < seen[key]:
-                seen[key] = cid
-        pdf = pd.DataFrame(
-            list(seen.items()) or [(None, None)],
-            columns=["_norm", "canonical_id"],
-        ).astype("string")
-        if not seen:
-            pdf = pdf.iloc[0:0]
-        return F.broadcast(spark.createDataFrame(pdf))
+    canonical_id, taken in the id's native order and only then rendered
+    as a string (10 < 9 as longs; the emitted column is always string).
+    A nondeterministic pick (dropDuplicates keeps an arbitrary row)
+    would destabilize the resume fingerprint across reruns. Null
+    surfaces and null canonical ids are unusable mappings and dropped."""
     return F.broadcast(
         aliases.filter(
             F.col("surface").isNotNull() & F.col("canonical_id").isNotNull()
@@ -108,36 +58,20 @@ def build_alias_dim(
         )
         .groupBy("_norm")
         .agg(F.min("canonical_id").alias("canonical_id"))
-        # The driver path emits pandas string dtype for both columns;
-        # cast AFTER the min so a numeric canonical_id is still picked
-        # by native ordering (matching the driver loop's python `<`)
-        # and only rendered as string — both gate paths now emit the
-        # same schema for non-string ids.
         .select("_norm", F.col("canonical_id").cast("string").alias("canonical_id"))
     )
 
 
-def patch_unresolved(
-    linked: DataFrame,
-    extra: DataFrame,
-    surface_cols=("subj_surface", "obj_surface"),
-) -> DataFrame:
+def patch_unresolved(linked: DataFrame, extra: DataFrame) -> DataFrame:
     """Second-pass linking without rescanning the mention stream: rows
     whose ``<col>_cid`` is null get resolved against the (tiny) extra
     mappings; already-resolved rows pass through untouched (their join
     key is null, and null keys never match). Equivalent to re-running
     link_mentions with the augmented dim because the extra mappings'
     normalized keys are exactly the base dim's misses."""
-    dim = F.broadcast(
-        extra.select(
-            normalize_surface(F.col("surface")).alias("_norm"),
-            F.col("canonical_id"),
-        )
-        .groupBy("_norm")
-        .agg(F.min("canonical_id").alias("canonical_id"))
-    )
+    dim = build_alias_dim(extra)
     out = linked
-    for col in surface_cols:
+    for col in SURFACE_COLS:
         cid = col.replace("_surface", "_cid")
         out = (
             out.withColumn(
@@ -167,7 +101,7 @@ def augment_alias_dim(dim: DataFrame, extra: DataFrame) -> DataFrame:
         F.col("surface").isNotNull() & F.col("canonical_id").isNotNull()
     ).select(
         normalize_surface(F.col("surface")).alias("_norm"),
-        # dim canonical_id is string on both gate paths — align extras
+        # dim canonical_id is string — align extras
         F.col("canonical_id").cast("string").alias("canonical_id"),
     )
     combined = (
@@ -189,11 +123,8 @@ def link_mentions(
     mentions: DataFrame,
     aliases: DataFrame | None = None,
     *,
-    surface_cols=("subj_surface", "obj_surface"),
-    collect_dim: bool | None = None,
     dim: DataFrame | None = None,
     broadcast_vocab: bool | None = None,
-    vocab_rows: int | None = None,
 ) -> DataFrame:
     """Resolve each surface column to ``<col>_cid`` via the broadcast
     alias dict; misses stay null for the LSH stage.
@@ -215,27 +146,24 @@ def link_mentions(
     a shuffle join rather than OOM every executor. ``broadcast_vocab``
     =None (auto) persists the distinct vocabulary and counts it (one
     map-side-combined agg; the persist is then reused by the resolve
-    join); pass ``vocab_rows`` when known to skip the counting job, or
-    True/False to force a strategy.
+    join); pass True/False to force a strategy.
     """
     if dim is None:
         if aliases is None:
             raise ValueError("link_mentions needs aliases or a prebuilt dim")
-        dim = build_alias_dim(aliases, collect_dim=collect_dim)
+        dim = build_alias_dim(aliases)
     # one scan over the fact table: explode all surface columns into a
     # single vocabulary pass (a union of selects would scan per column)
     vocab = mentions.select(
-        F.explode(F.array(*[F.col(c) for c in surface_cols])).alias("_surface")
+        F.explode(F.array(*[F.col(c) for c in SURFACE_COLS])).alias("_surface")
     ).distinct()
     from ..cache import pin
 
     if broadcast_vocab is None:
-        if vocab_rows is None:
-            vocab = pin(vocab)
-            vocab_rows = vocab.count()
         from ..operators.endpoints import BROADCAST_THRESHOLD_ROWS
 
-        broadcast_vocab = vocab_rows <= BROADCAST_THRESHOLD_ROWS
+        vocab = pin(vocab)
+        broadcast_vocab = vocab.count() <= BROADCAST_THRESHOLD_ROWS
     resolved = (
         vocab
         .withColumn("_norm", normalize_surface(F.col("_surface")))
@@ -250,7 +178,7 @@ def link_mentions(
         # distinct + normalize subtree runs once, not per column.
         resolved = pin(resolved)
     out = mentions
-    for col in surface_cols:
+    for col in SURFACE_COLS:
         cid_col = col.replace("_surface", "_cid")
         out = out.join(
             resolved.select(

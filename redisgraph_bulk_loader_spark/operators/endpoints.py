@@ -10,9 +10,9 @@ registry (ns, ext_id) -> internal_id. The registry is broadcast when it
 fits (dims up to low GBs on big executors); beyond that it is a shuffle
 hash join, where hub entities (a handful of ids carrying a large
 fraction of edges) would skew single reducers — handled here by
-explicit salting: the registry side is replicated salt-ways for the
-hub keys only, the edge side salts uniformly, so hot keys spread over
-``salt`` reducers. AQE skew-join remains the backstop.
+explicit salting (``skew.salted_join``): the registry side is
+replicated salt-ways, the edge side salts uniformly, so hot keys spread
+over the salt reducers. AQE skew-join remains the backstop.
 """
 
 from __future__ import annotations
@@ -23,28 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..exceptions import CSVError
-
-
-def _salted_registry_join(
-    edges: DataFrame,
-    registry: DataFrame,
-    edge_key: str,
-    out_col: str,
-    salt: int,
-) -> DataFrame:
-    """Shuffle join with uniform edge-side salting: registry replicated
-    ``salt`` ways (registry is the small-but-not-broadcastable side)."""
-    reg = registry.select(
-        F.col("ext_id").alias(edge_key), F.col("internal_id").alias(out_col)
-    ).withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-    salted_edges = edges.withColumn(
-        "_salt", (F.xxhash64(F.monotonically_increasing_id()) % salt + salt) % salt
-    )
-    return salted_edges.join(reg, [edge_key, "_salt"], "left").drop("_salt")
+from .skew import salted_join
 
 
 #: above this many registry rows the broadcast would OOM executors at
-#: scale — auto mode switches to the salted shuffle join.
+#: scale — auto mode switches to the salted shuffle join. Read at call
+#: time, so tests can lower it.
 BROADCAST_THRESHOLD_ROWS = 5_000_000
 
 
@@ -56,9 +40,6 @@ def resolve_endpoints(
     dst_col: str = "dst_id",
     skip_invalid: bool = False,
     broadcast_registry: Optional[bool] = None,
-    salt: Optional[int] = None,
-    registry_rows: Optional[int] = None,
-    broadcast_threshold_rows: int = BROADCAST_THRESHOLD_ROWS,
     eager_check: bool = False,
 ) -> DataFrame:
     """edges(+src_col,dst_col) x registry(ext_id, internal_id) ->
@@ -70,54 +51,24 @@ def resolve_endpoints(
     piggybacks the real action — no extra job); ``eager_check=True``
     restores the fail-at-call-time behavior (extra job, dim-scale only).
 
-    Join strategy: ``broadcast_registry=None`` (auto) gates on registry
-    size — broadcast below ``broadcast_threshold_rows``, salted shuffle
-    join above (billions of nodes must never broadcast). Pass
-    ``registry_rows`` when the caller already knows the count to avoid
-    the counting job.
+    Join strategy: ``broadcast_registry=None`` (auto) counts the
+    registry and broadcasts it up to ``BROADCAST_THRESHOLD_ROWS`` rows;
+    above that (or with False) it runs ``skew.salted_join`` — billions
+    of nodes must never broadcast.
     """
     if broadcast_registry is None:
-        n = registry_rows if registry_rows is not None else registry.count()
-        broadcast_registry = n <= broadcast_threshold_rows
-        if not broadcast_registry and salt is None:
-            salt = 16
+        broadcast_registry = registry.count() <= BROADCAST_THRESHOLD_ROWS
     reg = registry.select("ext_id", "internal_id")
     if broadcast_registry:
         reg = F.broadcast(reg)
-        joined = edges.join(
-            reg.select(
-                F.col("ext_id").alias(src_col),
-                F.col("internal_id").alias("src_internal"),
-            ),
-            src_col,
-            "left",
-        ).join(
-            reg.select(
-                F.col("ext_id").alias(dst_col),
-                F.col("internal_id").alias("dst_internal"),
-            ),
-            dst_col,
-            "left",
-        )
-    elif salt:
-        joined = _salted_registry_join(edges, registry, src_col, "src_internal", salt)
-        joined = _salted_registry_join(joined, registry, dst_col, "dst_internal", salt)
-    else:
-        joined = edges.join(
-            reg.select(
-                F.col("ext_id").alias(src_col),
-                F.col("internal_id").alias("src_internal"),
-            ),
-            src_col,
-            "left",
-        ).join(
-            reg.select(
-                F.col("ext_id").alias(dst_col),
-                F.col("internal_id").alias("dst_internal"),
-            ),
-            dst_col,
-            "left",
-        )
+    joined = edges
+    for key, out_col in ((src_col, "src_internal"), (dst_col, "dst_internal")):
+        side = reg.select(F.col("ext_id").alias(key),
+                          F.col("internal_id").alias(out_col))
+        if broadcast_registry:
+            joined = joined.join(side, key, "left")
+        else:
+            joined = salted_join(joined, side, [key], how="left")
 
     bad = F.col("src_internal").isNull() | F.col("dst_internal").isNull()
     if skip_invalid:

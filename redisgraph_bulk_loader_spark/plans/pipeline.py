@@ -40,63 +40,56 @@ from ..operators.endpoints import BROADCAST_THRESHOLD_ROWS, resolve_endpoints
 from ..operators.skew import two_phase_count
 
 
-def _lsh_extra_mappings(
+def _lsh_extra_mappings_scoped(
     mentions_linked: DataFrame, aliases: DataFrame, threshold: float
 ) -> Optional[DataFrame]:
     """Resolve leftover surfaces via LSH against canonical surfaces;
     returns the extra (surface, canonical_id) mappings, or None when
-    every surface already resolved."""
-    from ..cache import pin
+    every surface already resolved.
 
-    # Pinned: the isEmpty() probe below and the LSH prep both evaluate
-    # this frame, and its lineage is the full link pass over the
-    # mention stream — without the pin each consumer re-runs the
-    # mentions scan + broadcast joins. Dim-scale by construction
-    # (distinct unresolved surfaces); released by the caller's
-    # PinScope once the checkpointed mappings exist.
-    unresolved = pin(
-        mentions_linked.filter(F.col("subj_cid").isNull())
-        .select(F.col("subj_surface").alias("surface"))
-        .union(
-            mentions_linked.filter(
-                F.col("obj_cid").isNull() & (F.col("obj_kind") != "media")
-            ).select(F.col("obj_surface").alias("surface"))
-        )
-        .distinct()
-    )
-    if unresolved.isEmpty():
-        return None
-    matches = lsh_candidate_pairs(
-        unresolved,
-        aliases,
-        "surface",
-        "canonical_id",
-        "surface",
-        "surface",
-        threshold=threshold,
-    )
-    extra = matches.select(
-        F.col("surface_lsh").alias("surface"),
-        F.col("canonical_id_lsh").alias("canonical_id"),
-    )
-    # The LSH plan (minhash + banding over the unresolved vocabulary) is
-    # expensive; every consumer (augmented dim, canonicalization — which
-    # references the alias table twice) would re-execute it lazily.
-    # The result is dim-scale by construction: pin it once.
-    return extra.localCheckpoint(eager=True)
-
-
-def _lsh_extra_mappings_scoped(
-    mentions_linked: DataFrame, aliases: DataFrame, threshold: float
-) -> Optional[DataFrame]:
-    """_lsh_extra_mappings with its internal caches scoped: the eager
-    checkpoint cuts lineage, so the prepped shingle/signature frames
-    lsh_candidate_pairs pins are released here instead of living for
-    the session (persist hygiene, VERDICT r3 #3)."""
-    from ..cache import PinScope
+    Its caches are scoped: the eager checkpoint at the end cuts
+    lineage, so the unresolved vocabulary and the shingle/signature
+    frames lsh_candidate_pairs pins are released here instead of living
+    for the session (persist hygiene, VERDICT r3 #3)."""
+    from ..cache import PinScope, pin
 
     with PinScope():
-        return _lsh_extra_mappings(mentions_linked, aliases, threshold)
+        # Pinned: the isEmpty() probe below and the LSH prep both
+        # evaluate this frame, and its lineage is the full link pass
+        # over the mention stream — without the pin each consumer
+        # re-runs the mentions scan + broadcast joins. Dim-scale by
+        # construction (distinct unresolved surfaces).
+        unresolved = pin(
+            mentions_linked.filter(F.col("subj_cid").isNull())
+            .select(F.col("subj_surface").alias("surface"))
+            .union(
+                mentions_linked.filter(
+                    F.col("obj_cid").isNull() & (F.col("obj_kind") != "media")
+                ).select(F.col("obj_surface").alias("surface"))
+            )
+            .distinct()
+        )
+        if unresolved.isEmpty():
+            return None
+        matches = lsh_candidate_pairs(
+            unresolved,
+            aliases,
+            "surface",
+            "canonical_id",
+            "surface",
+            "surface",
+            threshold=threshold,
+        )
+        extra = matches.select(
+            F.col("surface_lsh").alias("surface"),
+            F.col("canonical_id_lsh").alias("canonical_id"),
+        )
+        # The LSH plan (minhash + banding over the unresolved
+        # vocabulary) is expensive; every consumer (augmented dim,
+        # canonicalization — which references the alias table twice)
+        # would re-execute it lazily. The result is dim-scale by
+        # construction: pin it once.
+        return extra.localCheckpoint(eager=True)
 
 
 def _coded_dim(df: DataFrame, col: str, out_col: str, code_col: str) -> DataFrame:
@@ -108,6 +101,23 @@ def _coded_dim(df: DataFrame, col: str, out_col: str, code_col: str) -> DataFram
         .withColumn(code_col,
                     F.row_number().over(Window.orderBy(out_col)) - 1)
     )
+
+
+#: build_graph result key -> catalog table, for the tables written after
+#: extraction (``mentions`` is staged on its own, before linking)
+_TABLES = {"nodes": "nodes", "edges": "edges", "triples": "triples",
+           "registry": "node_registry", "pred_counts": "pred_counts"}
+
+
+def _add_registries(results: dict) -> dict:
+    """Add the label/reltype registries (tiny dims mirroring the
+    reference's header tokens) derived from ``results``' nodes and
+    triples."""
+    results["labels"] = _coded_dim(results["nodes"], "label", "label",
+                                   "label_code")
+    results["rel_types"] = _coded_dim(results["triples"], "pred",
+                                      "rel_type", "rel_code")
+    return results
 
 
 def canonicalize(
@@ -155,7 +165,6 @@ def build_graph(
     *,
     lsh_threshold: float = 0.5,
     strict_spans: bool = False,
-    checkpoint_stages: bool = True,
 ) -> dict:
     """Run the full pipeline; returns dict of result DataFrames and
     writes catalog tables when a catalog is given.
@@ -189,18 +198,11 @@ def build_graph(
     # is a fingerprint scan + catalog reads — no linking, no
     # canonicalization, no counts (north_rule: a killed-after-complete
     # rerun recomputes nothing).
-    _tables = {"mentions": "mentions", "nodes": "nodes", "edges": "edges",
-               "triples": "triples", "registry": "node_registry",
-               "pred_counts": "pred_counts"}
-    if (catalog is not None and checkpoint_stages
-            and catalog.is_complete("build_graph", fp)
-            and all(catalog.exists(t) for t in _tables.values())):
-        results = {k: catalog.read(t) for k, t in _tables.items()}
-        results["labels"] = _coded_dim(results["nodes"], "label", "label",
-                                       "label_code")
-        results["rel_types"] = _coded_dim(results["triples"], "pred",
-                                          "rel_type", "rel_code")
-        return results
+    tables = {"mentions": "mentions", **_TABLES}
+    if (catalog is not None and catalog.is_complete("build_graph", fp)
+            and all(catalog.exists(t) for t in tables.values())):
+        return _add_registries(
+            {k: catalog.read(t) for k, t in tables.items()})
 
     # 1. span validation. Strict mode is inline (raise_error fused into
     # the doc_id projection — doc_id is load-bearing downstream, so
@@ -227,7 +229,7 @@ def build_graph(
     # session pin (outside the scope): the returned mentions frame IS
     # the cache in that mode.
     mentions = extract_mentions(docs)
-    staged = catalog is not None and checkpoint_stages
+    staged = catalog is not None
     if staged:
         if not catalog.is_complete("mentions", fp):
             catalog.write("mentions", mentions, stage="mentions",
@@ -322,17 +324,12 @@ def build_graph(
         registry = pin(build_node_registry(
             node_ext, ["ext_id"], ["label", "ext_id"]
         ))
-        n_registry = registry.count()  # warms the persist; feeds the join gate
         nodes = node_ext.join(registry, "ext_id").select("internal_id", "label", "ext_id")
 
-        # label / reltype registries (tiny dims, mirror header tokens)
-        labels_reg = _coded_dim(nodes, "label", "label", "label_code")
-        rel_reg = _coded_dim(distinct_triples, "pred", "rel_type",
-                             "rel_code")
-
         # 6. endpoint resolution -> edges with internal ids. Strategy is
-        # size-gated (broadcast vs salted shuffle) on the known registry
-        # count; strict validation is inline (no extra validation job).
+        # size-gated (broadcast vs salted shuffle) on the registry count,
+        # which also warms the registry pin; strict validation is inline
+        # (no extra validation job).
         edges = resolve_endpoints(
             distinct_triples.select(
                 F.col("subj").alias("src_id"),
@@ -341,23 +338,19 @@ def build_graph(
             ),
             registry,
             skip_invalid=False,
-            broadcast_registry=None,
-            registry_rows=n_registry,
         ).select("src_internal", "dst_internal", "rel_type")
 
         # 7. metrics: per-predicate counts, skew-safe
         pred_counts = two_phase_count(triples, ["pred"], count_col="n_triples")
 
-        results = {
+        results = _add_registries({
             "mentions": mentions,
             "triples": distinct_triples,
             "nodes": nodes,
             "edges": edges,
             "registry": registry,
-            "labels": labels_reg,
-            "rel_types": rel_reg,
             "pred_counts": pred_counts,
-        }
+        })
 
         if catalog is not None:
             if not catalog.is_complete("build_graph", fp):
@@ -374,26 +367,22 @@ def build_graph(
                 from concurrent.futures import ThreadPoolExecutor
 
                 _writes = [
-                    ("nodes", nodes, ["label"], "nodes"),
-                    ("edges", edges, ["rel_type"], "edges"),
-                    ("triples", distinct_triples, None, "triples"),
-                    ("node_registry", registry, None, "node_registry"),
+                    ("nodes", nodes, ["label"]),
+                    ("edges", edges, ["rel_type"]),
+                    ("triples", distinct_triples, None),
+                    ("node_registry", registry, None),
                 ]
 
                 def _w(spec):
-                    tbl, frame, part, stg = spec
+                    tbl, frame, part = spec
                     catalog.write(tbl, frame, partition_by=part,
-                                  stage=stg, input_fingerprint=fp)
+                                  stage=tbl, input_fingerprint=fp)
 
                 with ThreadPoolExecutor(max_workers=2) as pool:
                     list(pool.map(_w, _writes))
                 catalog.write("pred_counts", pred_counts,
                               stage="build_graph", input_fingerprint=fp)
-            table_of = {
-                "nodes": "nodes", "edges": "edges", "triples": "triples",
-                "registry": "node_registry", "pred_counts": "pred_counts",
-            }
-            for key, table in table_of.items():
+            for key, table in _TABLES.items():
                 if catalog.exists(table):
                     results[key] = catalog.read(table)
             # Every heavy result is now backed by a catalog table;
@@ -401,10 +390,7 @@ def build_graph(
             # release every cache the scope collected (incl. the
             # linking vocabulary pins) — nothing returned references
             # them anymore (persist hygiene, VERDICT r3 #3).
-            results["labels"] = _coded_dim(
-                results["nodes"], "label", "label", "label_code")
-            results["rel_types"] = _coded_dim(
-                results["triples"], "pred", "rel_type", "rel_code")
+            _add_registries(results)
             scope.release()
         else:
             # no catalog: the returned lazy frames still reference the

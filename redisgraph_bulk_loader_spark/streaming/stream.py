@@ -112,6 +112,12 @@ def stream_documents_to_graph(
     accumulated table — document-level extraction+linking is the
     per-batch increment.
 
+    ``dim`` is ``build_alias_dim(aliases)``: a lazy aggregate over the
+    alias table, so every micro-batch re-runs it. A long-running stream
+    can checkpoint it once before starting:
+    ``F.broadcast(build_alias_dim(aliases).checkpoint())`` (the
+    checkpoint drops the broadcast hint, hence the re-wrap).
+
     ``dedup_exact=True`` interposes the stateful ingest dedup
     (``dedup_stream``) BEFORE extraction, keyed on the canonical JSON
     of the span sequence (the per-row invariant the pipeline

@@ -143,7 +143,7 @@ class TestEndpoints:
         b = sorted(
             (r.src_internal, r.dst_internal)
             for r in resolve_endpoints(
-                edges, registry, broadcast_registry=False, salt=4
+                edges, registry, broadcast_registry=False
             ).collect()
         )
         assert a == b
@@ -659,15 +659,6 @@ class TestDedupAssignments:
         monkeypatch.setattr(
             SF, "xxhash64", lambda *cols: lit(42).cast("long")
         )
-        assert self._run(spark) == self._EXPECT
-
-    def test_reps_join_is_size_gated(self, spark, monkeypatch):
-        """Above the broadcast threshold the representative join must
-        fall back to a shuffle join and still produce the same
-        assignment."""
-        from redisgraph_bulk_loader_spark.operators import endpoints
-
-        monkeypatch.setattr(endpoints, "BROADCAST_THRESHOLD_ROWS", 0)
         assert self._run(spark) == self._EXPECT
 
     def test_canonicalize_collision_independent(self, spark, monkeypatch):

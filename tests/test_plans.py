@@ -68,25 +68,22 @@ class TestPlanShapes:
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
 
-    def test_registry_join_strategy_size_gated(self, spark):
+    def test_registry_join_strategy_size_gated(self, spark, monkeypatch):
         """VERDICT done-criterion: auto mode must broadcast a small
         registry and switch to the salted shuffle join above the
         threshold (billions of nodes must never broadcast)."""
+        from redisgraph_bulk_loader_spark.operators import endpoints
+
         reg = spark.createDataFrame(
             [(str(i), i) for i in range(20)], "ext_id string, internal_id long"
         )
         edges = spark.createDataFrame(
             [("0", "5"), ("1", "3")], "src_id string, dst_id string"
         )
-        small = resolve_endpoints(
-            edges, reg, skip_invalid=True,
-            broadcast_registry=None, registry_rows=20,
-        )
+        small = resolve_endpoints(edges, reg, skip_invalid=True)
         assert "BroadcastHashJoin" in plan_of(small)
-        large = resolve_endpoints(
-            edges, reg, skip_invalid=True,
-            broadcast_registry=None, registry_rows=10_000_000,
-        )
+        monkeypatch.setattr(endpoints, "BROADCAST_THRESHOLD_ROWS", 0)
+        large = resolve_endpoints(edges, reg, skip_invalid=True)
         p = plan_of(large)
         assert "_salt" in p
         # the registry side must not be broadcast in the big-dim plan
@@ -135,12 +132,11 @@ class TestPlanShapes:
         assert got[("d1", 1)] == ("e3", "e1")
         assert got[("d2", 0)] == ("e9", "img://x")
 
-    def test_alias_dim_gate_paths_agree_on_ambiguous_surface(self, spark):
+    def test_alias_dim_ambiguous_surface_takes_min_id(self, spark):
         """VERDICT r3 #2: two aliases normalizing to the same surface
-        but mapping to DIFFERENT canonicals must resolve identically
-        (min canonical_id) on both gate paths — linking output must not
-        depend on which side of the 100k gate the dict falls, nor vary
-        across reruns (resume-fingerprint stability)."""
+        but mapping to DIFFERENT canonicals must resolve to the min
+        canonical_id — linking output must not vary across reruns
+        (resume-fingerprint stability)."""
         from redisgraph_bulk_loader_spark.link import build_alias_dim
 
         aliases = spark.createDataFrame(
@@ -152,32 +148,45 @@ class TestPlanShapes:
             ],
             "surface string, canonical_id string",
         )
-        driver = build_alias_dim(aliases, collect_dim=True)
-        dist = build_alias_dim(aliases, collect_dim=False)
-        a = sorted(tuple(r) for r in driver.collect())
-        b = sorted(tuple(r) for r in dist.collect())
-        assert a == b
-        assert dict(a)["a lovelace"] == "e1"  # deterministic min
+        a = dict(tuple(r) for r in build_alias_dim(aliases).collect())
+        assert a["a lovelace"] == "e1"  # deterministic min
 
-    def test_alias_dim_gate_paths_agree_on_long_ids(self, spark):
-        """VERDICT r4 wrong#3: with a non-string canonical_id the two
-        gate paths must emit the SAME schema (string) and the same
-        winner — picked by NATIVE ordering before the render (10 < 9 as
-        longs even though '10' > '9' as strings)."""
+    def test_alias_dim_long_ids_min_in_native_order(self, spark):
+        """VERDICT r4 wrong#3: with a non-string canonical_id the dim
+        emits a string column, with the winner picked by NATIVE
+        ordering before the render (9 < 10 as longs even though
+        '10' < '9' as strings)."""
         from redisgraph_bulk_loader_spark.link import build_alias_dim
 
         aliases = spark.createDataFrame(
             [("A. Lovelace", 10), ("a lovelace", 9), ("Bob", 2)],
             "surface string, canonical_id long",
         )
-        driver = build_alias_dim(aliases, collect_dim=True)
-        dist = build_alias_dim(aliases, collect_dim=False)
-        assert [f.dataType.simpleString() for f in driver.schema.fields] == \
-               [f.dataType.simpleString() for f in dist.schema.fields]
-        a = sorted(tuple(r) for r in driver.collect())
-        b = sorted(tuple(r) for r in dist.collect())
-        assert a == b
-        assert dict(a)["a lovelace"] == "9"  # numeric min, string render
+        dim = build_alias_dim(aliases)
+        assert [f.dataType.simpleString() for f in dim.schema.fields] == \
+               ["string", "string"]
+        a = dict(tuple(r) for r in dim.collect())
+        assert a["a lovelace"] == "9"  # numeric min, string render
+
+    def test_link_mentions_exact_spelling_links_with_tab_and_nbsp(self, spark):
+        """A mention spelled exactly like an alias links to it, also when
+        the spelling carries a tab or a no-break space: both sides of
+        the join are keyed by the same normalize_surface expression."""
+        aliases = spark.createDataFrame(
+            [("\tAda Lovelace", "e1"), ("Ada\u00a0Lovelace", "e2"),
+             ("Grace Hopper", "e3")],
+            "surface string, canonical_id string",
+        )
+        mentions = spark.createDataFrame(
+            [("d1", 0, "\tAda Lovelace", "knows", "Grace Hopper", "entity"),
+             ("d2", 0, "Ada\u00a0Lovelace", "knows", "Grace Hopper",
+              "entity")],
+            "doc_id string, span_offset int, subj_surface string, "
+            "pred string, obj_surface string, obj_kind string",
+        )
+        got = {tuple(r) for r in link_mentions(mentions, aliases)
+               .select("doc_id", "subj_cid", "obj_cid").collect()}
+        assert got == {("d1", "e1", "e3"), ("d2", "e2", "e3")}
 
     def test_augment_alias_dim_drops_null_extras(self, spark):
         """ADVICE r4: a null canonical_id extra must not win the

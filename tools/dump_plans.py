@@ -107,12 +107,11 @@ def dump_operators(spark, sf_dir: str) -> None:
          linked),
         ("Endpoint resolution, broadcast strategy (small registry)",
          resolve_endpoints(edges, reg, skip_invalid=True,
-                           broadcast_registry=None, registry_rows=50)),
+                           broadcast_registry=True)),
         ("Endpoint resolution, salted shuffle strategy (registry above "
          "the broadcast gate — note `_salt` and no broadcast)",
          resolve_endpoints(edges, reg, skip_invalid=True,
-                           broadcast_registry=None,
-                           registry_rows=10_000_000)),
+                           broadcast_registry=False)),
         ("MinHash-LSH near-dup pairs (banded equi-join; no cartesian "
          "product anywhere)",
          minhash_lsh_dedup_pairs(docs_t, "doc_id", "text", threshold=0.5)),
