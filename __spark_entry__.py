@@ -1024,11 +1024,11 @@ def _ann_lsh_oracle_sql() -> str:
 
 def _minhash_ctes(threshold: float = 0.5) -> str:
     """Shared CTE block: DuckDB twin of
-    minhash_lsh_dedup_pairs(portable=True, n=3, num_hashes=32,
-    bands=8) — the SAME md5-prefix base hash, (a*h+b) mod 2^31-1 seed
-    mix, 8x4 string band buckets, and exact-Jaccard verification, so
-    the pair set matches the engine's by algorithm (banding misses
-    reproduce identically)."""
+    minhash_lsh_dedup_pairs(portable=True, n=3) under the shared
+    MINHASH_NUM_HASHES=32 / MINHASH_BANDS=8 geometry — the SAME
+    md5-prefix base hash, (a*h+b) mod 2^31-1 seed mix, 8x4 string band
+    buckets, and exact-Jaccard verification, so the pair set matches
+    the engine's by algorithm (banding misses reproduce identically)."""
     from redisgraph_bulk_loader_spark.functions.hashing import (
         MINHASH_P,
         minhash_params,

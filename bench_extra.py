@@ -80,7 +80,7 @@ def main():
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     from redisgraph_bulk_loader_spark.functions.hashing import (
-        band_buckets,
+        minhash_bands,
         minhash_signature_df,
         word_shingles,
     )
@@ -121,10 +121,9 @@ def main():
         base = ensure_min_parallelism(docs).select(
             F.col("doc_id").alias("_id"),
             word_shingles(F.col("text"), 3).alias("_sh")).persist()
-        sigs = minhash_signature_df(base, ["_id"], "_sh", 32, portable=True)
-        banded = sigs.select("_id", F.explode(
-            band_buckets(F.col("_sig"), 8, 4, portable=True)).alias("_bb")
-        ).select("_id", "_bb.band", "_bb.bucket")
+        banded = minhash_bands(
+            minhash_signature_df(base, ["_id"], "_sh", portable=True),
+            ["_id"], portable=True)
         pairs = (banded.alias("a").join(banded.alias("b"), ["band", "bucket"])
                  .filter(F.col("a._id") < F.col("b._id"))
                  .select(F.col("a._id").alias("id_a"),

@@ -3,7 +3,6 @@ from .hashing import (  # noqa: F401
     char_shingles,
     hamming64,
     jaccard,
-    minhash_signature,
     simhash_df,
     word_shingles,
 )

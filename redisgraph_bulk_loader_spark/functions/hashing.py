@@ -2,7 +2,8 @@
 
 All pure JVM-side column expressions (``xxhash64``, higher-order array
 functions) — no Python on the data path. Shared by entity-linking LSH
-(link/lsh.py) and document near-dup detection (operators/dedup.py).
+(link/lsh.py), document near-dup detection (operators/dedup.py) and
+embedding banding (operators/similarity.py).
 
 At scale: a MinHash signature is O(num_hashes) longs per row computed
 map-side; LSH banding turns an O(n^2) similarity join into an equi-join
@@ -61,26 +62,11 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     return _bind_once(toks, from_toks)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """array<bigint> MinHash signature: per seed s, min over shingles of
-    xxhash64(shingle, s).
-
-    NOTE: higher-order-function form — evaluated *interpreted* (HOFs are
-    outside whole-stage codegen), fine for dim-scale columns. For fact
-    tables use ``minhash_signature_df`` (explode + codegen'd hash
-    projection + map-side-combined min aggregate), which is 10-100x
-    faster per row."""
-    # NB: the lambda must take exactly ONE arg — pyspark passes the
-    # element index to a second parameter, which would silently override
-    # a `s=s` default and collapse every seed to the element index.
-    def _mk(seed: int):
-        return lambda x: F.xxhash64(x, F.lit(seed))
-
-    sigs = [
-        F.array_min(F.transform(shingles, _mk(s))) for s in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
+#: MinHash-LSH geometry of every MinHash caller (entity-linking LSH and
+#: document dedup): 32 seeds split into 8 bands of 4 rows. The DuckDB
+#: oracle twins hard-code the same values.
+MINHASH_NUM_HASHES = 32
+MINHASH_BANDS = 8
 
 #: Mersenne prime 2^31-1 — the modulus of the portable MinHash seed
 #: mix. Products a*h stay under 2^62, inside BIGINT on both engines
@@ -105,19 +91,19 @@ def minhash_signature_df(
     df: DataFrame,
     id_cols: List[str],
     shingles_col: str,
-    num_hashes: int = 32,
     *,
     out_col: str = "_sig",
     portable: bool = False,
 ) -> DataFrame:
     """Scalable MinHash: explode shingles -> ONE codegen'd projection of
-    num_hashes hash columns -> hash aggregate with map-side partial
-    min. The shuffle carries num_hashes longs per id (not shingles).
+    MINHASH_NUM_HASHES hash columns -> hash aggregate with map-side
+    partial min. The shuffle carries those longs per id (not shingles).
 
     ``portable=True`` swaps the per-seed xxhash64 for one md5-prefix
     base hash + arithmetic seed mixing mod 2^31-1, so a DuckDB twin
     reproduces the exact signatures (oracle mode; also one md5 per
-    shingle instead of num_hashes xxhash64 calls)."""
+    shingle instead of one xxhash64 call per seed)."""
+    num_hashes = MINHASH_NUM_HASHES
     exploded = df.select(
         *id_cols, F.explode(F.col(shingles_col)).alias("_shingle")
     )
@@ -165,6 +151,38 @@ def band_buckets(
             F.struct(F.lit(b).alias("band"), bucket.alias("bucket"))
         )
     return F.array(*entries)
+
+
+def minhash_bands(
+    sigs: DataFrame, id_cols: List[str], *, portable: bool = False
+) -> DataFrame:
+    """(id_cols, band, bucket) rows: the LSH band explode of a ``_sig``
+    frame (``minhash_signature_df`` output) under the shared
+    MINHASH_BANDS x (MINHASH_NUM_HASHES / MINHASH_BANDS) geometry.
+    Candidate pairs are the rows sharing a (band, bucket)."""
+    buckets = band_buckets(F.col("_sig"), MINHASH_BANDS,
+                           MINHASH_NUM_HASHES // MINHASH_BANDS,
+                           portable=portable)
+    return sigs.select(*id_cols, F.explode(buckets).alias("_bb")).select(
+        *id_cols, "_bb.band", "_bb.bucket")
+
+
+def bit_bands(h: Column, bands: int, width: int) -> Column:
+    """array<struct<band:int, bucket:bigint>> — bit-slice banding of a
+    packed 64-bit hash: band b is bits [b*width, (b+1)*width). The
+    shift is arithmetic and the mask follows it, so negative packed
+    values band like any other. Raises ValueError unless the bands fit
+    the 64-bit word with width >= 1 (Spark takes a long's shift
+    distance mod 64, so wider banding would silently wrap)."""
+    if width < 1 or bands * width > 64:
+        raise ValueError(
+            f"{bands} bands of {width} bits do not fit a 64-bit hash")
+    mask = F.lit((1 << width) - 1)
+    return F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.shiftright(h, b * width).bitwiseAND(mask).alias("bucket"))
+        for b in range(bands)
+    ])
 
 
 def jaccard(a: Column, b: Column) -> Column:

@@ -5,4 +5,4 @@ from .alias import (  # noqa: F401
     normalize_surface,
     patch_unresolved,
 )
-from .lsh import lsh_candidate_pairs, minhash_signatures  # noqa: F401
+from .lsh import lsh_candidate_pairs  # noqa: F401

@@ -19,28 +19,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
-    band_buckets,
     char_shingles,
     jaccard,
+    minhash_bands,
     minhash_signature_df,
 )
 
-
-def minhash_signatures(
-    df: DataFrame, text_col: str, *, num_hashes: int = 32, shingle_n: int = 3
-) -> DataFrame:
-    """df + (_shingles, _sig) via the explode/codegen MinHash path."""
-    with_sh = df.withColumn("_shingles", char_shingles(F.col(text_col), shingle_n))
-    # one signature per distinct text (same text => same signature),
-    # joined back — keeps the hash projection small and codegen'd
-    sigs = minhash_signature_df(
-        with_sh.select(F.col(text_col).alias("_mh_key"), "_shingles")
-        .dropDuplicates(["_mh_key"]),
-        ["_mh_key"],
-        "_shingles",
-        num_hashes,
-    )
-    return with_sh.join(sigs, with_sh[text_col] == sigs["_mh_key"]).drop("_mh_key")
+#: Degenerate-bucket guard: right-side (band, bucket) groups holding more
+#: rows than this are dropped before the band join.
+BUCKET_CAP = 1000
 
 
 def lsh_candidate_pairs(
@@ -51,36 +38,38 @@ def lsh_candidate_pairs(
     left_text: str,
     right_text: str,
     *,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     threshold: float = 0.5,
-    bucket_cap: int = 1000,
 ) -> DataFrame:
     """(left_key, right_key, jaccard_sim) candidate matches above
-    threshold, best match first per left key."""
-    rows = num_hashes // bands
-
+    threshold, best match first per left key. Texts are compared as
+    padded, lower-cased char 3-shingle sets."""
     from ..cache import pin
 
     from ..operators.skew import ensure_min_parallelism
 
     def prep(df, key, text, side):
-        sigs = minhash_signatures(ensure_min_parallelism(df), text,
-                                  num_hashes=num_hashes, shingle_n=shingle_n)
+        with_sh = ensure_min_parallelism(df).withColumn(
+            "_shingles", char_shingles(F.col(text)))
+        # one signature per distinct text (same text => same signature),
+        # joined back — keeps the hash projection small and codegen'd
+        sigs = minhash_signature_df(
+            with_sh.select(F.col(text).alias("_mh_key"), "_shingles")
+            .dropDuplicates(["_mh_key"]),
+            ["_mh_key"],
+            "_shingles",
+        )
         # pinned via the cache registry: released by the caller's
         # PinScope once the candidate result is materialized, or by
-        # release_pins() in a long-lived session
-        base = pin(sigs.select(
+        # release_pins() in a long-lived session. Banding stays on this
+        # pinned (key, signature) frame: banding the distinct texts and
+        # joining the bands back to keys gives the same pairs but adds
+        # jobs and shuffle to the linker.
+        base = pin(with_sh.join(sigs, with_sh[text] == sigs["_mh_key"]).select(
             F.col(key).alias(f"{side}_key"),
             F.col("_shingles").alias(f"{side}_sh"),
             F.col("_sig"),
         ))
-        banded = base.select(
-            f"{side}_key",
-            F.explode(band_buckets(F.col("_sig"), bands, rows)).alias("_bb"),
-        ).select(f"{side}_key", "_bb.band", "_bb.bucket")
-        return base.drop("_sig"), banded
+        return base.drop("_sig"), minhash_bands(base, [f"{side}_key"])
 
     lbase, lp = prep(left, left_key, left_text, "l")
     rbase, rp = prep(right, right_key, right_text, "r")
@@ -88,7 +77,7 @@ def lsh_candidate_pairs(
     # Degenerate-bucket guard: drop buckets with pathological fan-out.
     bucket_sizes = rp.groupBy("band", "bucket").agg(F.count("*").alias("_bsz"))
     rp = rp.join(
-        F.broadcast(bucket_sizes.filter(F.col("_bsz") > bucket_cap)),
+        F.broadcast(bucket_sizes.filter(F.col("_bsz") > BUCKET_CAP)),
         ["band", "bucket"],
         "left_anti",
     )

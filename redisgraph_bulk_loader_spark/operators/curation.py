@@ -61,6 +61,11 @@ def curate_corpus(
     ``dedup='none'`` skips the survivor gate. Survivorship runs over
     the gate-passing subset (filter-then-dedup; see module doc).
 
+    Null ids: a document with a null id never survives dedup — under
+    'exact' its group's min id skips nulls and ``id == min`` is
+    null-false; under 'minhash' it gets no non-null ``rep_id`` — while
+    ``dedup='none'`` keeps it like any other gate-passer.
+
     ``max_dup_gram_frac`` (optional) adds the repetitious-document
     gate between the scalar gates and dedup: drop documents whose
     repeated word ``rep_ngram``-gram char mass exceeds that fraction

@@ -3,15 +3,16 @@
 - exact_dedup: content-hash groupBy (md5 of normalized text), keeps the
   smallest id per group — one shuffle on a 128-bit key, fully
   SQL-expressible (DuckDB oracle twin in __spark_entry__).
-- ngram_jaccard_pairs: exact n-gram Jaccard via shingle explode +
-  self-equi-join on shingle + pair aggregation — the classic
-  inverted-index form; never a cross join. SQL-expressible.
-- minhash_lsh_dedup_pairs: MinHash + banding (functions/hashing.py) —
-  the 100 TB path: candidate generation shuffles band buckets only,
-  then exact-Jaccard verification on candidates.
+- set_jaccard_pairs: exact set Jaccard via element self-equi-join +
+  pair aggregation — the classic inverted-index form; never a cross
+  join. SQL-expressible. ngram_jaccard_pairs runs it over word
+  shingles (multimodal.media_near_dup_pairs over frame digests).
+- minhash_lsh_dedup_pairs: MinHash + banding (functions/hashing.py
+  minhash_bands) — the 100 TB path: candidate generation shuffles band
+  buckets only, then exact-Jaccard verification on candidates.
 - simhash_dup_pairs: 64-bit SimHash; near-dups = hamming distance <= k
-  among same-band candidates (4-band split of the 64-bit hash, standard
-  Charikar trick).
+  among same-band candidates (hashing.bit_bands 4x16-bit split,
+  standard Charikar trick).
 """
 
 from __future__ import annotations
@@ -20,9 +21,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import (
-    band_buckets,
+    bit_bands,
     hamming64,
     jaccard,
+    minhash_bands,
     minhash_signature_df,
     simhash_df,
     word_shingles,
@@ -41,35 +43,25 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_freq: int = 10000,
+def set_jaccard_pairs(
+    elems: DataFrame, threshold: float, max_freq: int
 ) -> DataFrame:
-    """Exact Jaccard-similar pairs (id_a < id_b, jaccard_sim) via the
-    inverted-index join: |A ∩ B| from the shingle self-join, |A|,|B|
-    from per-doc shingle counts. Stopword-grade shingles above
-    ``max_shingle_freq`` are dropped BEFORE both the join and the size
-    counts (sizes must come from the same filtered shingle set as the
-    intersection, or jaccard_sim is underestimated) — at web scale one
-    universal shingle would otherwise produce a quadratic reducer; this
-    bound is the standard guard."""
-    from .skew import ensure_min_parallelism
-
-    sh = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("_id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("_sh"),
-    ).distinct()
-    freq = sh.groupBy("_sh").agg(F.count("*").alias("_f"))
-    sh_f = sh.join(F.broadcast(freq.filter(F.col("_f") > max_shingle_freq)), "_sh", "left_anti")
-    sizes = sh_f.groupBy("_id").agg(F.count("*").alias("_sz"))
+    """Exact set-Jaccard pairs (id_a < id_b, jaccard_sim) over distinct
+    (_id, _e) element rows via the inverted-index join: |A ∩ B| from
+    the element self-join, |A|,|B| from per-id element counts — never a
+    cross join. Elements held by more than ``max_freq`` ids are dropped
+    BEFORE both the join and the size counts (sizes must come from the
+    same filtered set as the intersection, or jaccard_sim is
+    underestimated) — at web scale one universal element would
+    otherwise produce a quadratic reducer; this bound is the standard
+    guard."""
+    freq = elems.groupBy("_e").agg(F.count("*").alias("_f"))
+    kept = elems.join(F.broadcast(freq.filter(F.col("_f") > max_freq)),
+                      "_e", "left_anti")
+    sizes = kept.groupBy("_id").agg(F.count("*").alias("_sz"))
     inter = (
-        sh_f.alias("a")
-        .join(sh_f.alias("b"), "_sh")
+        kept.alias("a")
+        .join(kept.alias("b"), "_e")
         .filter(F.col("a._id") < F.col("b._id"))
         .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .agg(F.count("*").alias("_inter"))
@@ -86,14 +78,33 @@ def ngram_jaccard_pairs(
     )
 
 
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    n: int = 3,
+    threshold: float = 0.8,
+    max_shingle_freq: int = 10000,
+) -> DataFrame:
+    """Exact word n-gram Jaccard-similar pairs (id_a < id_b,
+    jaccard_sim): ``set_jaccard_pairs`` over each doc's distinct
+    shingles, capped at ``max_shingle_freq`` docs per shingle."""
+    from .skew import ensure_min_parallelism
+
+    sh = ensure_min_parallelism(df).select(
+        F.col(id_col).alias("_id"),
+        F.explode(word_shingles(F.col(text_col), n)).alias("_e"),
+    ).distinct()
+    return set_jaccard_pairs(sh, threshold, max_shingle_freq)
+
+
 def minhash_lsh_dedup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     *,
     n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.8,
     portable: bool = False,
 ) -> DataFrame:
@@ -103,7 +114,6 @@ def minhash_lsh_dedup_pairs(
     ``portable=True`` uses the md5-prefix seed-mix hash family and
     string band buckets so a DuckDB oracle reproduces the exact
     candidate set (algorithm twin — banding misses included)."""
-    rows = num_hashes // bands
     from ..cache import pin
     from .skew import ensure_min_parallelism
 
@@ -115,14 +125,9 @@ def minhash_lsh_dedup_pairs(
     # deduped as bare key pairs BEFORE the shingle arrays rejoin, so the
     # pair-dedup shuffle moves 2 ids per row instead of 2 full shingle
     # sets per band collision.
-    sigs = minhash_signature_df(base, ["_id"], "_sh", num_hashes,
-                                portable=portable)
-    banded = sigs.select(
-        "_id",
-        F.explode(
-            band_buckets(F.col("_sig"), bands, rows, portable=portable)
-        ).alias("_bb"),
-    ).select("_id", "_bb.band", "_bb.bucket")
+    banded = minhash_bands(
+        minhash_signature_df(base, ["_id"], "_sh", portable=portable),
+        ["_id"], portable=portable)
     pairs = (
         banded.alias("a")
         .join(banded.alias("b"), ["band", "bucket"])
@@ -165,21 +170,8 @@ def simhash_dup_pairs(
         portable=portable_hash,
     )
     banded = hashed.select(
-        "_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("bucket"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("_bb"),
+        "_id", "simhash",
+        F.explode(bit_bands(F.col("simhash"), 4, 16)).alias("_bb"),
     ).select("_id", "simhash", "_bb.band", "_bb.bucket")
     return (
         banded.alias("a")
@@ -206,6 +198,20 @@ def _cc_assignments(pairs: DataFrame, id_col: str) -> DataFrame:
 
     return min_id_components(pairs, "id_a", "id_b").select(
         F.col("id").alias(id_col), F.col("rep").alias("_rep"))
+
+
+def _fan_out(df: DataFrame, id_col: str, assigned: DataFrame) -> DataFrame:
+    """(id_col, rep_id) for every distinct id of ``df``: its component
+    representative from ``assigned`` (``_cc_assignments`` output), or
+    itself when it is in no pair."""
+    return (
+        df.select(id_col).distinct()
+        .join(assigned, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce(F.col("_rep"), F.col(id_col)).alias("rep_id"),
+        )
+    )
 
 
 def dedup_assignments(
@@ -293,38 +299,31 @@ def dedup_assignments(
         # member_map remains O(duplicate docs), not O(corpus).
         from .skew import ensure_min_parallelism
 
-        with PinScope():
-            fpm = ensure_min_parallelism(df).filter(
-                F.col(id_col).isNotNull()
-            ).select(
-                F.col(id_col),
-                F.coalesce(doc_fingerprint(F.col(text_col)),
-                           F.lit("\x00null-text")).alias("_xfp"),
-            )
-            wfp = Window.partitionBy("_xfp")
-            member_map = (
-                fpm.withColumn("_grep", F.min(id_col).over(wfp))
-                .withColumn("_gmax", F.max(id_col).over(wfp))
-                .filter(F.col("_grep") != F.col("_gmax"))
-                .groupBy(id_col)  # one row per id even under dup-id input
-                .agg(F.min("_grep").alias("_grep"))
-            ).localCheckpoint(eager=True)
-            # Band everything except the non-rep members of multi
-            # groups (anti join against the small dup-member set) —
-            # df's text column never enters the group map.
-            band_input = df.join(
-                member_map.filter(F.col(id_col) != F.col("_grep"))
-                .select(id_col),
-                id_col, "anti",
-            )
-            pairs_pre = minhash_lsh_dedup_pairs(
-                band_input, id_col, text_col, n=n, threshold=threshold,
-                portable=portable,
-            ).localCheckpoint(eager=True)
+        fpm = ensure_min_parallelism(df).filter(
+            F.col(id_col).isNotNull()
+        ).select(
+            F.col(id_col),
+            F.coalesce(doc_fingerprint(F.col(text_col)),
+                       F.lit("\x00null-text")).alias("_xfp"),
+        )
+        wfp = Window.partitionBy("_xfp")
+        member_map = (
+            fpm.withColumn("_grep", F.min(id_col).over(wfp))
+            .withColumn("_gmax", F.max(id_col).over(wfp))
+            .filter(F.col("_grep") != F.col("_gmax"))
+            .groupBy(id_col)  # one row per id even under dup-id input
+            .agg(F.min("_grep").alias("_grep"))
+        ).localCheckpoint(eager=True)
+        # Band everything except the non-rep members of multi groups
+        # (anti join against the small dup-member set) — df's text
+        # column never enters the group map.
+        band_input = df.join(
+            member_map.filter(F.col(id_col) != F.col("_grep"))
+            .select(id_col),
+            id_col, "anti",
+        )
     with PinScope():
-        if method == "minhash" and member_map is not None:
-            pairs = pairs_pre
-        elif method == "minhash":
+        if method == "minhash":
             pairs = minhash_lsh_dedup_pairs(
                 band_input, id_col, text_col, n=n, threshold=threshold,
                 portable=portable,
@@ -338,29 +337,21 @@ def dedup_assignments(
             raise ValueError("method must be 'minhash' or 'exact'")
         pairs = pairs.localCheckpoint(eager=True)
     assigned = _cc_assignments(pairs, id_col)
-    if member_map is not None:
-        # Fan cluster assignments back out: dup-group members inherit
-        # their group rep's component rep (groups whose rep is in no
-        # pair keep the group rep — the min member id, the old path's
-        # answer for an all-identical cluster); every other doc maps
-        # through itself.
-        return (
-            df.select(id_col).distinct()
-            .join(member_map, id_col, "left")
-            .withColumn("_g", F.coalesce(F.col("_grep"), F.col(id_col)))
-            .join(assigned.select(F.col(id_col).alias("_g"), "_rep"),
-                  "_g", "left")
-            .select(
-                id_col,
-                F.coalesce(F.col("_rep"), F.col("_g")).alias("rep_id"),
-            )
-        )
+    if member_map is None:
+        return _fan_out(df, id_col, assigned)
+    # Fan cluster assignments back out: dup-group members inherit their
+    # group rep's component rep (groups whose rep is in no pair keep the
+    # group rep — the min member id, the old path's answer for an
+    # all-identical cluster); every other doc maps through itself.
     return (
         df.select(id_col).distinct()
-        .join(assigned, id_col, "left")
+        .join(member_map, id_col, "left")
+        .withColumn("_g", F.coalesce(F.col("_grep"), F.col(id_col)))
+        .join(assigned.select(F.col(id_col).alias("_g"), "_rep"),
+              "_g", "left")
         .select(
             id_col,
-            F.coalesce(F.col("_rep"), F.col(id_col)).alias("rep_id"),
+            F.coalesce(F.col("_rep"), F.col("_g")).alias("rep_id"),
         )
     )
 
@@ -395,15 +386,7 @@ def embedding_dedup_assignments(
             df, id_col=id_col, vec_col=vec_col, threshold=threshold,
             bits=bits, bands=bands, dim=dim, seed=seed,
         ).select("id_a", "id_b").localCheckpoint(eager=True)
-    assigned = _cc_assignments(pairs, id_col)
-    return (
-        df.select(id_col).distinct()
-        .join(assigned, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("_rep"), F.col(id_col)).alias("rep_id"),
-        )
-    )
+    return _fan_out(df, id_col, _cc_assignments(pairs, id_col))
 
 
 def dedup_lines(

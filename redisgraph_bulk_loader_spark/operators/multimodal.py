@@ -232,10 +232,9 @@ def media_near_dup_pairs(
     """Near-duplicate media by frame-hash Jaccard: sample frames
     (1->N), fingerprint each frame JVM-side (sha2 over the frame
     bytes — only the 64-hex digest ever shuffles, payloads stay in
-    their task), then the inverted-index join on digest gives
-    |A ∩ B| and per-media frame-set sizes give the Jaccard — the same
-    never-cross-join shape as ngram_jaccard_pairs, over frames instead
-    of shingles. Returns (ref_a, ref_b, jaccard_sim), ref_a < ref_b.
+    their task), then ``dedup.set_jaccard_pairs`` — the inverted-index
+    join on digest that ngram_jaccard_pairs runs over shingles.
+    Returns (ref_a, ref_b, jaccard_sim), ref_a < ref_b.
 
     Digests appearing in more than ``max_frame_freq`` media are dropped
     BEFORE both the self-join and the size counts (the same guard as
@@ -248,6 +247,7 @@ def media_near_dup_pairs(
     A real decoder would emit perceptual frame hashes (pHash) instead
     of byte digests; the join/aggregation shape is identical."""
     from ..cache import pin
+    from .dedup import set_jaccard_pairs
 
     frames = sample_frames(media, every_ms=every_ms)
     # Four consumers reference the fingerprint frame (both sizes joins
@@ -256,34 +256,12 @@ def media_near_dup_pairs(
     # Registered with the cache registry — release_pins() reclaims it
     # in long-lived sessions.
     fp_all = pin(frames.select(
-        F.col("media_ref").alias("_ref"),
-        F.sha2(F.col("frame_payload"), 256).alias("_fh"),
+        F.col("media_ref").alias("_id"),
+        F.sha2(F.col("frame_payload"), 256).alias("_e"),
     ).distinct())
-    freq = fp_all.groupBy("_fh").agg(F.count("*").alias("_f"))
-    fp = fp_all.join(
-        F.broadcast(freq.filter(F.col("_f") > max_frame_freq)),
-        "_fh", "left_anti",
-    )
-    sizes = fp.groupBy("_ref").agg(F.count("*").alias("_sz"))
-    inter = (
-        fp.alias("a")
-        .join(fp.alias("b"), "_fh")
-        .filter(F.col("a._ref") < F.col("b._ref"))
-        .groupBy(F.col("a._ref").alias("ref_a"), F.col("b._ref").alias("ref_b"))
-        .agg(F.count("*").alias("_i"))
-    )
-    return (
-        inter.join(sizes.select(F.col("_ref").alias("ref_a"),
-                                F.col("_sz").alias("_sa")), "ref_a")
-        .join(sizes.select(F.col("_ref").alias("ref_b"),
-                           F.col("_sz").alias("_sb")), "ref_b")
-        .withColumn(
-            "jaccard_sim",
-            F.col("_i") / (F.col("_sa") + F.col("_sb") - F.col("_i")),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select("ref_a", "ref_b", "jaccard_sim")
-    )
+    return set_jaccard_pairs(fp_all, threshold, max_frame_freq).select(
+        F.col("id_a").alias("ref_a"), F.col("id_b").alias("ref_b"),
+        "jaccard_sim")
 
 
 def media_dedup_exact(media: DataFrame) -> DataFrame:

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import bit_bands
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -38,6 +40,22 @@ def _norm(a):
 
 def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _cosine_topk(cands: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim, rank): exact-cosine re-rank of
+    (query_id, _qv, neighbor_id, _cv) candidate rows — self-matches
+    dropped, top ``k`` per query, ties to the smaller neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        cands.filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    )
 
 
 def brute_force_topk(
@@ -59,19 +77,7 @@ def brute_force_topk(
     )
     c = ensure_min_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    scored = (
-        c.crossJoin(q)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _cosine_topk(c.crossJoin(q), k)
 
 
 def _random_planes(dim: int, bits: int, seed: int) -> List[List[float]]:
@@ -84,8 +90,13 @@ def _signature_udf(planes: List[List[float]]):
     batch ((n x dim) @ (dim x bits)), sign bits packed into a long.
     Spark's higher-order-function fold evaluates *interpreted* per
     element — measured 10x+ slower for 32 planes — while this is the
-    brief's sanctioned vectorized-pandas-UDF dot product."""
+    brief's sanctioned vectorized-pandas-UDF dot product. More than 64
+    planes raise ValueError: a long holds 64 sign bits."""
     from pyspark.sql.functions import pandas_udf
+
+    if len(planes) > 64:
+        raise ValueError(
+            f"{len(planes)} hyperplanes do not fit a 64-bit signature")
 
     P = np.asarray(planes, dtype=np.float64).T  # (dim, bits)
     weights = (np.int64(1) << np.arange(len(planes), dtype=np.int64))
@@ -137,17 +148,15 @@ def ann_self_join_pairs(
     near-identical recall stays ~1: p_bit_flip ~ theta/pi is tiny at
     high cosine, so (1-p)^16 per band stays near 1). The sign bit of
     the packed long is just another signature bit; banding masks after
-    an arithmetic shift, so negative packed values are handled.
+    an arithmetic shift, so negative packed values are handled. Raises
+    ValueError when bits > 64 or bits < bands (a band needs >= 1 bit).
 
     Returns (id_a, id_b, cos_sim) with id_a < id_b."""
-    planes = _random_planes(dim, bits, seed)
-    rows_per_band = bits // bands
-    mask = (1 << rows_per_band) - 1
-
     from ..cache import pin
     from .skew import ensure_min_parallelism
 
-    sig = _signature_udf(planes)
+    sig = _signature_udf(_random_planes(dim, bits, seed))
+    bucket_bands = bit_bands(F.col("_sig"), bands, bits // bands)
     # Three consumers reference base (banding + both verify-join
     # sides); without the pin each re-runs the scan + Arrow signature
     # pass. Registered with the session cache registry
@@ -156,18 +165,7 @@ def ann_self_join_pairs(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     ).withColumn("_sig", sig(F.col("_v"))))
     banded = base.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("_sig"), b * rows_per_band)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("_bb"),
+        "_id", F.explode(bucket_bands).alias("_bb"),
     ).select("_id", "_bb.band", "_bb.bucket")
     # Pair dedup AFTER verification (r6): the candidate stream is the
     # big data here (~bands * n^2 / 2^(bits/bands) rows — 3.8M at the
@@ -271,8 +269,6 @@ def ivf_topk(
     the Arrow batch closures (m x dim doubles); the corpus never
     shuffles except the final per-cell candidate join, and the
     assignment is one numpy matmul per batch."""
-    from pyspark.sql import Window as W
-
     from ..cache import pin
     from .skew import ensure_min_parallelism
 
@@ -330,19 +326,7 @@ def ivf_topk(
             "_cell", F.explode(_probe_cells_udf(cells, cents, n_probe)(F.col("_qv")))
         )
     )
-    scored = (
-        c.join(q, "_cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _cosine_topk(c.join(q, "_cell"), k)
 
 
 def lsh_bucketed_topk(
@@ -378,16 +362,4 @@ def lsh_bucketed_topk(
     q = F.broadcast(
         qbase.withColumn("_bucket", F.explode(F.array(*probes))).drop("_sig")
     )
-    scored = (
-        c.join(q, "_bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _cosine_topk(c.join(q, "_bucket"), k)

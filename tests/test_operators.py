@@ -257,6 +257,21 @@ class TestSimilarity:
         extras = got - {(1, 1001), (2, 1002), (3, 1003)}
         assert extras <= {(0, 61)}
 
+    def test_signature_width_guard(self, spark, emb):
+        """Signatures pack into one long: more than 64 hyperplanes, or
+        more bands than bits (zero-width bands, every vector in bucket
+        0), raise instead of silently running a different geometry."""
+        from redisgraph_bulk_loader_spark.operators.similarity import (
+            ann_self_join_pairs,
+        )
+
+        with pytest.raises(ValueError):
+            ann_self_join_pairs(emb, bits=128, dim=16)
+        with pytest.raises(ValueError):
+            ann_self_join_pairs(emb, bits=4, bands=8, dim=16)
+        with pytest.raises(ValueError):
+            lsh_bucketed_topk(emb, emb.limit(1), bits=65, dim=16)
+
 
 # ---------------------------------------------------------------------------
 # Connected components
@@ -1501,6 +1516,34 @@ class TestCorpusCuration:
         # doc 1 fails the token gate; doc 2 (its near-dup) must still
         # survive — dedup runs over gate-passers only
         assert kept == [2, 3]
+
+
+    def test_null_id_contract(self, spark):
+        """A null-id document is dropped by both dedup modes (no
+        survivorship without an id) and kept by dedup='none'."""
+        from redisgraph_bulk_loader_spark.operators.curation import (
+            curate_corpus,
+        )
+
+        docs = spark.createDataFrame(
+            [
+                (1, "alpha beta gamma delta epsilon zeta eta theta"),
+                (None, "one two three four five six seven eight nine ten"),
+                (3, "spark engines shuffle joins across many worker cores"),
+            ],
+            "doc_id long, text string",
+        )
+
+        def kept(mode):
+            return sorted(
+                (r.doc_id for r in curate_corpus(
+                    docs, min_quality=0.0, min_tokens=1, max_tokens=100,
+                    dedup=mode).collect()),
+                key=lambda i: (i is not None, i))
+
+        assert kept("exact") == [1, 3]
+        assert kept("minhash") == [1, 3]
+        assert kept("none") == [None, 1, 3]
 
 
 class TestRepetitionStats:

@@ -386,3 +386,77 @@ class TestMixingPlanShape:
         for line in plan.splitlines():
             if "Exchange" in line and "text" in line:
                 raise AssertionError(f"text rides a shuffle: {line}")
+
+
+class TestLshLinker:
+    """MinHash-LSH linking of surfaces the alias join left unresolved:
+    planted one-letter typos of stock surfaces against the stock alias
+    table (kg builds over stock documents resolve every surface, so
+    they never reach this stage)."""
+
+    # typo -> canonical id of the stock surface it was typed from
+    _TYPOS = {
+        "Ada Lovelaxe": "ent_00000",
+        "Grace Hoppet": "ent_00030",
+        "Edsger Dijkstrs": "ent_00045",
+        "Barbara Liskow": "ent_00060",
+        "Leslie Lamporr": "ent_00105",
+        "Bjarne Stroustrop": "ent_00195",
+        "Kazakhstam": "place:Kazakhstan",
+    }
+    _UNRELATED = "Quixotic Zebra Fjord"
+
+    @staticmethod
+    def _py_jaccard(a: str, b: str) -> float:
+        def shingles(s):
+            p = f" {s.strip(' ').lower()} "
+            return {p[i:i + 3] for i in range(max(len(p) - 2, 1))}
+
+        sa, sb = shingles(a), shingles(b)
+        return len(sa & sb) / len(sa | sb)
+
+    def test_typos_map_to_canonical_ids(self, spark):
+        from redisgraph_bulk_loader_spark.link import lsh_candidate_pairs
+        from redisgraph_bulk_loader_spark.sources import alias_table
+        from redisgraph_bulk_loader_spark.sources.documents import (
+            entity_surface_pairs,
+        )
+
+        left = spark.createDataFrame(
+            [(t,) for t in self._TYPOS] + [(self._UNRELATED,), (None,)],
+            "surface string",
+        )
+        right = alias_table(spark).unionByName(spark.createDataFrame(
+            [(None, "ent_null")], "surface string, canonical_id string"))
+        got = {
+            r.surface_lsh: (r.canonical_id_lsh, r.jaccard_sim)
+            for r in lsh_candidate_pairs(
+                left, right, "surface", "canonical_id", "surface", "surface",
+                threshold=0.5,
+            ).collect()
+        }
+        assert {s: cid for s, (cid, _) in got.items()} == self._TYPOS
+        assert self._UNRELATED not in got and None not in got
+        assert "ent_null" not in {cid for cid, _ in got.values()}
+        surfaces = entity_surface_pairs()
+        for typo, (cid, sim) in got.items():
+            best = max(self._py_jaccard(typo, s)
+                       for s, c in surfaces if c == cid)
+            assert sim == pytest.approx(best, abs=1e-12)
+
+    def test_build_graph_links_typo_subject(self, spark):
+        from redisgraph_bulk_loader_spark.cache import release_pins
+        from redisgraph_bulk_loader_spark.plans import build_graph
+        from redisgraph_bulk_loader_spark.sources import alias_table
+        from redisgraph_bulk_loader_spark.sources.documents import (
+            DOCUMENTS_SCHEMA,
+        )
+
+        docs = spark.createDataFrame(
+            [("d1", [("text", "Ada Lovelaxe knows Grace Hopper.", "", 0)])],
+            DOCUMENTS_SCHEMA,
+        )
+        res = build_graph(spark, docs, alias_table(spark))
+        triples = {(r.subj, r.pred, r.obj) for r in res["triples"].collect()}
+        release_pins()
+        assert triples == {("ent_00000", "knows", "ent_00030")}

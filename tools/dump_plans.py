@@ -62,7 +62,11 @@ def dump_queries(spark, sf_dir: str, tag: str, names) -> None:
 def dump_operators(spark, sf_dir: str) -> None:
     from pyspark.sql import functions as F
 
-    from redisgraph_bulk_loader_spark.link import build_alias_dim, link_mentions
+    from redisgraph_bulk_loader_spark.link import (
+        build_alias_dim,
+        link_mentions,
+        lsh_candidate_pairs,
+    )
     from redisgraph_bulk_loader_spark.operators.dedup import (
         dedup_assignments,
         dedup_lines,
@@ -100,6 +104,9 @@ def dump_operators(spark, sf_dir: str) -> None:
     )
     edges = spark.createDataFrame([("1", "2")], "src_id string, dst_id string")
     docs_t = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    typos = spark.createDataFrame(
+        [("Ada Lovelaxe",), ("Grace Hoppet",), ("Kazakhstam",)],
+        "surface string")
 
     sections = [
         ("Extraction + broadcast alias linking (Arrow batch -> "
@@ -125,6 +132,12 @@ def dump_operators(spark, sf_dir: str) -> None:
          "broadcast above BROADCAST_THRESHOLD_ROWS)",
          link_mentions(mentions, dim=build_alias_dim(alias_table(spark)),
                        broadcast_vocab=False)),
+        ("kg LSH linker: one-letter typos of stock surfaces against the "
+         "alias table — MinHash bands on both pinned signature frames, "
+         "bucket-cap anti join, band equi-join, key-pair dedup before "
+         "the shingle sets rejoin; no cartesian product",
+         lsh_candidate_pairs(typos, alias_table(spark), "surface",
+                             "canonical_id", "surface", "surface")),
         ("hash_sample: deterministic Bernoulli draw — pure scan filter, "
          "ZERO Exchange anywhere",
          hash_sample(docs_t, "doc_id", 0.25)),
