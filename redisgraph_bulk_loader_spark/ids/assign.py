@@ -5,17 +5,19 @@ internal id, in node-file order then row order (studied at
 /root/reference/redisgraph_bulk_loader/query_buffer.py:12-23,
 label.py:51-61). Its batch-size-invariance test pins that internal ids
 are stable regardless of batching. At cluster scale the dict becomes a
-DataFrame and the counter becomes the classic two-job pattern:
+DataFrame and the counter is size-gated on one count. Dim-scale input
+gets one global ``row_number`` window: a single task, cheaper at that
+size than the jobs of the parallel path. Larger input gets the classic
+two-job pattern, both jobs fully parallel:
 
   job 1: repartitionByRange on the stable sort key, count rows per
          partition (tiny collect — one long per partition)
   job 2: row_number within each partition + the partition's prefix-sum
          offset
 
-``monotonically_increasing_id`` is neither dense nor rerun-stable, and
-a single global window would serialize on one task — this pattern keeps
-both jobs fully parallel and the result invariant under partition
-count, which is what checkpoint resume requires.
+Both give the same ids, invariant under partition count, which is what
+checkpoint resume requires (``monotonically_increasing_id`` is neither
+dense nor rerun-stable).
 
 Duplicate identifiers follow the reference: last occurrence wins for
 the mapping while all node rows are still created; strict mode fails
@@ -24,6 +26,7 @@ the job (label.py:51-61, test_reused_identifier).
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, Window
@@ -40,12 +43,21 @@ def assign_dense_ids(
     start: int = 0,
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
-    """Add a dense 0-based id column ordered by ``order_cols``.
-
-    ``order_cols`` must be a total order (add tie-breakers if not);
-    determinism across reruns and partition counts follows from the
-    range partitioner + in-partition sort using only the data itself.
+    """Add a dense LONG id column numbered from ``start`` in
+    ``order_cols`` order (a total order — add tie-breakers if not;
+    nulls sort first). One ``df.count()`` picks the branch against
+    ``canon.components.DRIVER_CC_THRESHOLD`` (read at call time): a
+    global window at or below it, the range-partition path over
+    ``num_partitions`` (default: the default parallelism) above.
     """
+    from ..canon import components
+
+    if df.count() <= components.DRIVER_CC_THRESHOLD:
+        return df.withColumn(
+            id_col,
+            (F.row_number().over(Window.orderBy(*order_cols)) - 1 + start)
+            .cast("long"),
+        )
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parted = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
     # Persist before the two downstream jobs: repartitionByRange picks
@@ -61,33 +73,24 @@ def assign_dense_ids(
         r["_pid"]: r["cnt"]
         for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     }
-    offsets = {}
-    acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
+    # prefix sums from start; the gate guarantees at least one partition
+    pids = sorted(counts)
+    offsets = list(accumulate((counts[p] for p in pids[:-1]), initial=start))
     # Tiny broadcast dim (one row per partition) instead of a when-chain:
     # stays O(1) in plan size even at tens of thousands of partitions.
     # Built from pandas (Arrow, JVM-side decode) — a pickled-list
     # createDataFrame re-forks python workers on every materialization.
     import pandas as pd
 
-    spark = df.sparkSession
-    items = sorted(offsets.items()) or [(0, start)]
-    offsets_pdf = pd.DataFrame(
-        {"_pid": [int(p) for p, _ in items],
-         "_offset": [int(o) for _, o in items]}
-    ).astype({"_pid": "int32", "_offset": "int64"})
-    offsets_df = spark.createDataFrame(
-        offsets_pdf, schema="_pid int, _offset long"
+    offsets_df = df.sparkSession.createDataFrame(
+        pd.DataFrame({"_pid": pids, "_offset": offsets})
+        .astype({"_pid": "int32", "_offset": "int64"}),
+        schema="_pid int, _offset long",
     )
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     return (
-        with_pid.join(F.broadcast(offsets_df), "_pid", "left")
-        .withColumn(
-            id_col,
-            F.row_number().over(w) - 1 + F.coalesce(F.col("_offset"), F.lit(start)),
-        )
+        with_pid.join(F.broadcast(offsets_df), "_pid")
+        .withColumn(id_col, F.row_number().over(w) - 1 + F.col("_offset"))
         .drop("_pid", "_offset")
     )
 

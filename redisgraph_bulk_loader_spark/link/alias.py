@@ -2,13 +2,16 @@
 
 Mentions carry raw surface forms; the alias dictionary (a small dim
 table — thousands to low millions of rows) maps normalized surfaces to
-canonical entity ids. The join is explicitly broadcast: at 10^12 docs
-the mention side is enormous and must never shuffle for a dim lookup.
+canonical entity ids. Linking is a function of the distinct surface
+vocabulary, so it runs there (``link_vocabulary``: one scan of the
+mention stream, then dim-scale work only); the stream joins the linked
+vocabulary back with explicit broadcasts — at 10^12 docs the mention
+side is enormous and must never shuffle for a dim lookup.
 
-Unresolved surfaces (left-join misses) flow to the MinHash-LSH
-candidate blocking stage (lsh.py) — resolution there produces extra
-(surface -> canonical) edges that connected-components canonicalization
-merges (canon/components.py).
+Unresolved vocabulary surfaces flow to the MinHash-LSH candidate
+blocking stage (lsh.py); ``patch_unresolved`` fills their ids on the
+vocabulary, and the extra (surface -> canonical) edges feed
+connected-components canonicalization (canon/components.py).
 """
 
 from __future__ import annotations
@@ -33,9 +36,9 @@ def normalize_surface(col: Column) -> Column:
 
 def build_alias_dim(aliases: DataFrame) -> DataFrame:
     """Build the normalized broadcast dim (_norm, canonical_id) ONCE per
-    run; pass the result to ``link_mentions(dim=...)`` so repeated link
-    passes (leftover probe, post-LSH relink) reuse the same broadcast
-    instead of rebuilding it — the measured per-run fixed cost.
+    run; pass the result to ``link_vocabulary``/``link_mentions(dim=...)``
+    so repeated calls (micro-batches of a stream) reuse it instead of
+    rebuilding it — the measured per-run fixed cost.
 
     Keys go through the same ``normalize_surface`` expression the
     mention side uses, so a mention spelled exactly like an alias
@@ -60,29 +63,6 @@ def build_alias_dim(aliases: DataFrame) -> DataFrame:
         .agg(F.min("canonical_id").alias("canonical_id"))
         .select("_norm", F.col("canonical_id").cast("string").alias("canonical_id"))
     )
-
-
-def patch_unresolved(linked: DataFrame, extra: DataFrame) -> DataFrame:
-    """Second-pass linking without rescanning the mention stream: rows
-    whose ``<col>_cid`` is null get resolved against the (tiny) extra
-    mappings; already-resolved rows pass through untouched (their join
-    key is null, and null keys never match). Equivalent to re-running
-    link_mentions with the augmented dim because the extra mappings'
-    normalized keys are exactly the base dim's misses."""
-    dim = build_alias_dim(extra)
-    out = linked
-    for col in SURFACE_COLS:
-        cid = col.replace("_surface", "_cid")
-        out = (
-            out.withColumn(
-                "_norm",
-                F.when(F.col(cid).isNull(), normalize_surface(F.col(col))),
-            )
-            .join(dim, "_norm", "left")
-            .withColumn(cid, F.coalesce(F.col(cid), F.col("canonical_id")))
-            .drop("_norm", "canonical_id")
-        )
-    return out
 
 
 def augment_alias_dim(dim: DataFrame, extra: DataFrame) -> DataFrame:
@@ -119,6 +99,71 @@ def augment_alias_dim(dim: DataFrame, extra: DataFrame) -> DataFrame:
     return F.broadcast(combined)
 
 
+def link_vocabulary(
+    mentions: DataFrame,
+    dim: DataFrame,
+    *,
+    broadcast_vocab: bool | None = None,
+) -> tuple[DataFrame, bool]:
+    """The linked surface vocabulary of ``mentions``:
+    ``(surface, ent, canonical_id)``, one row per distinct surface of
+    either surface column (null included). ``ent``: some use is a
+    subject or a non-media object (a null ``obj_kind`` is not) — only
+    those misses may go to LSH. ``canonical_id``: the ``dim`` lookup of
+    the normalized surface, null on a miss. One scan of the stream
+    feeds a map-side-combined aggregate, so the regex-heavy normalize
+    runs on distinct surfaces only.
+
+    Returns ``(vocab, broadcast)``: whether frames of the vocabulary's
+    size may be broadcast back to the stream (1e8-1e9 distinct surfaces
+    at 10^12 docs must shuffle-join instead). ``broadcast_vocab=None``
+    pins the vocabulary and counts it against
+    ``BROADCAST_THRESHOLD_ROWS`` (its only job); True/False forces the
+    answer (False also pins: a shuffle join back reads it once per
+    surface column)."""
+    from ..cache import pin
+    from ..operators.endpoints import BROADCAST_THRESHOLD_ROWS
+
+    obj_ent = (F.coalesce(F.col("obj_kind") != "media", F.lit(False))
+               if "obj_kind" in mentions.columns else F.lit(True))
+    uses = mentions.select(F.explode(F.array(
+        F.struct(F.col("subj_surface").alias("surface"),
+                 F.lit(True).alias("ent")),
+        F.struct(F.col("obj_surface").alias("surface"), obj_ent.alias("ent")),
+    )).alias("_u")).select("_u.*")
+    vocab = (
+        uses.groupBy("surface").agg(F.max("ent").alias("ent"))
+        .withColumn("_norm", normalize_surface(F.col("surface")))
+        .join(dim, "_norm", "left")
+        .select("surface", "ent", "canonical_id")
+    )
+    if broadcast_vocab is None:
+        vocab = pin(vocab)
+        broadcast_vocab = vocab.count() <= BROADCAST_THRESHOLD_ROWS
+    elif not broadcast_vocab:
+        vocab = pin(vocab)
+    return vocab, broadcast_vocab
+
+
+def patch_unresolved(vocab: DataFrame, extra: DataFrame) -> DataFrame:
+    """Second-pass linking on the vocabulary: surfaces whose
+    ``canonical_id`` is null are looked up in the extra (surface,
+    canonical_id) mappings; resolved surfaces pass through untouched
+    (their join key is null, and null keys never match). Equal to
+    relinking over ``augment_alias_dim(dim, extra)`` because the extra
+    mappings' normalized keys are exactly the base dim's misses."""
+    patch = build_alias_dim(extra).select(
+        "_norm", F.col("canonical_id").alias("_patch"))
+    return (
+        vocab.withColumn("_norm", F.when(
+            F.col("canonical_id").isNull(),
+            normalize_surface(F.col("surface"))))
+        .join(patch, "_norm", "left")
+        .select("surface", "ent",
+                F.coalesce("canonical_id", "_patch").alias("canonical_id"))
+    )
+
+
 def link_mentions(
     mentions: DataFrame,
     aliases: DataFrame | None = None,
@@ -131,59 +176,25 @@ def link_mentions(
 
     ``aliases``: (surface, canonical_id). Media objects resolve to
     themselves (the media_ref IS the object id). Pass a prebuilt
-    ``dim`` (from build_alias_dim) to reuse one broadcast across link
-    passes.
+    ``dim`` (from build_alias_dim) to reuse one broadcast across calls.
 
-    Shape: normalization (regex-heavy, allocation-heavy) runs only on
-    the DISTINCT surface vocabulary — at web scale the vocabulary is
-    orders of magnitude smaller than the mention stream, and regexing
-    every fact row was the measured allocation hot spot. The fact side
-    then does plain string-equality broadcast joins (codegen, minimal
-    garbage). The distinct is a map-side-combined partial aggregate.
-
-    The resolved-vocabulary broadcast is size-gated: distinct surfaces
-    over 10^12 docs can still be 1e8-1e9 rows, which must fall back to
-    a shuffle join rather than OOM every executor. ``broadcast_vocab``
-    =None (auto) persists the distinct vocabulary and counts it (one
-    map-side-combined agg; the persist is then reused by the resolve
-    join); pass True/False to force a strategy.
-    """
+    This is ``link_vocabulary`` (see there for ``broadcast_vocab``)
+    joined back to the stream once per surface column: the fact side
+    does plain string-equality joins (codegen, minimal garbage)."""
     if dim is None:
         if aliases is None:
             raise ValueError("link_mentions needs aliases or a prebuilt dim")
         dim = build_alias_dim(aliases)
-    # one scan over the fact table: explode all surface columns into a
-    # single vocabulary pass (a union of selects would scan per column)
-    vocab = mentions.select(
-        F.explode(F.array(*[F.col(c) for c in SURFACE_COLS])).alias("_surface")
-    ).distinct()
-    from ..cache import pin
-
-    if broadcast_vocab is None:
-        from ..operators.endpoints import BROADCAST_THRESHOLD_ROWS
-
-        vocab = pin(vocab)
-        broadcast_vocab = vocab.count() <= BROADCAST_THRESHOLD_ROWS
-    resolved = (
-        vocab
-        .withColumn("_norm", normalize_surface(F.col("_surface")))
-        .join(dim, "_norm", "left")
-        .select("_surface", F.col("canonical_id"))
-    )
-    if broadcast_vocab:
-        resolved = F.broadcast(resolved)
-    else:
-        # The shuffle-join fallback references the resolved vocabulary
-        # once per surface column — pin it so the mention scan +
-        # distinct + normalize subtree runs once, not per column.
-        resolved = pin(resolved)
+    vocab, small = link_vocabulary(mentions, dim,
+                                   broadcast_vocab=broadcast_vocab)
+    if small:
+        vocab = F.broadcast(vocab)
     out = mentions
     for col in SURFACE_COLS:
-        cid_col = col.replace("_surface", "_cid")
         out = out.join(
-            resolved.select(
-                F.col("_surface").alias(col), F.col("canonical_id").alias(cid_col)
-            ),
+            vocab.select(F.col("surface").alias(col),
+                         F.col("canonical_id").alias(
+                             col.replace("_surface", "_cid"))),
             col,
             "left",
         )

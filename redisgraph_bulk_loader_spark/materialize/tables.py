@@ -31,6 +31,7 @@ import json
 import os
 import threading
 import time
+from contextlib import contextmanager
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,10 +76,9 @@ class GraphCatalog:
             )
         os.makedirs(root, exist_ok=True)
         self._manifest_path = os.path.join(root, "_manifest.json")
-        # Serializes manifest read-modify-write so INDEPENDENT tables
-        # can be written from concurrent driver threads (build_graph
-        # overlaps its stage writes to back-fill task tails, guide-
-        # style): without it the whole-file JSON replace loses one
+        # Serializes every manifest read-modify-write (``_commit``) so
+        # INDEPENDENT tables can be written from concurrent driver
+        # threads: without it the whole-file JSON replace loses one
         # writer's commit. Concurrent writes to the SAME table remain
         # the caller's responsibility (snapshot indices are assigned
         # at write start).
@@ -110,6 +110,15 @@ class GraphCatalog:
         with open(tmp, "w") as f:
             json.dump(m, f, indent=1)
         os.replace(tmp, self._manifest_path)
+
+    @contextmanager
+    def _commit(self):
+        """Read-modify-write of the manifest under ``_mlock``: yields a
+        fresh read and saves it when the body returns (not on raise)."""
+        with self._mlock:
+            m = self._manifest()
+            yield m
+            self._save_manifest(m)
 
     # -- tables ------------------------------------------------------------
     def path(self, table: str) -> str:
@@ -212,11 +221,10 @@ class GraphCatalog:
         n = obs.get["n"]
         partitions = self._partition_counts(
             self._snapshot_path(table, snap_idx))
-        with self._mlock:
+        with self._commit() as m:
             # re-read fresh: a concurrent writer of ANOTHER table may
             # have committed since the top-of-write read, and the
             # whole-file manifest replace must not lose its entry
-            m = self._manifest()
             entry = m["tables"].get(table, {"snapshots": []})
             entry["snapshots"].append(
                 {
@@ -228,9 +236,10 @@ class GraphCatalog:
                     "partition_by": partition_by or [],
                     "input_fingerprint": input_fingerprint,
                     # Schema rides the commit log (as in Iceberg
-                    # metadata): an empty write can land zero parquet
-                    # files (AQE coalesces empty shuffle output to zero
-                    # tasks), and an empty table must still be readable.
+                    # metadata): reads pass it instead of inferring it,
+                    # and an empty write can land zero parquet files
+                    # (AQE coalesces empty shuffle output to zero
+                    # tasks) yet must still be readable.
                     "schema": observed.schema.json(),
                 }
             )
@@ -249,7 +258,6 @@ class GraphCatalog:
                         "ts": time.time(),
                     }
                 )
-            self._save_manifest(m)
 
     @staticmethod
     def _partition_counts(path: str) -> List[dict]:
@@ -307,17 +315,21 @@ class GraphCatalog:
                 f"{table} snapshot {idx} was expired by expire_snapshots; "
                 f"its data files are gone (lineage metadata remains)"
             )
-        if snap.get("rows") == 0 and snap.get("schema"):
-            # zero-row snapshot: may contain no parquet files at all;
-            # serve it from the recorded schema
+        schema = snap.get("schema")
+        if schema:
             from pyspark.sql.types import StructType
 
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(snap["schema"])))
+            schema = StructType.fromJson(json.loads(schema))
+            if snap.get("rows") == 0:
+                # zero-row snapshot: may contain no parquet files at all
+                return self.spark.createDataFrame([], schema)
         if self.fmt == "iceberg":
             return self.spark.table(self._iceberg_ident(table, idx))
-        return self.spark.read.format(self.fmt).load(
-            self._snapshot_path(table, idx))
+        # The recorded schema spares the read its schema-inference job;
+        # the file source still lays it out as an inferring read does
+        # (partition columns last, every field nullable).
+        return self.spark.read.load(self._snapshot_path(table, idx),
+                                    format=self.fmt, schema=schema or None)
 
     def read(self, table: str) -> DataFrame:
         """Read the table's current snapshot (legacy flat layout falls
@@ -341,14 +353,14 @@ class GraphCatalog:
         """Point the table's current snapshot at an older one (files
         stay; the commit log records the rollback as metadata-only,
         exactly Iceberg's rollback semantics)."""
-        m = self._manifest()
-        entry = m["tables"][table]
-        n = len(entry["snapshots"])
-        idx = snapshot if snapshot >= 0 else n + snapshot
-        if not (0 <= idx < n):
-            raise IndexError(f"{table} has {n} snapshots; asked for {snapshot}")
-        entry["current"] = idx
-        self._save_manifest(m)
+        with self._commit() as m:
+            entry = m["tables"][table]
+            n = len(entry["snapshots"])
+            idx = snapshot if snapshot >= 0 else n + snapshot
+            if not (0 <= idx < n):
+                raise IndexError(
+                    f"{table} has {n} snapshots; asked for {snapshot}")
+            entry["current"] = idx
 
     def snapshots(self, table: str) -> List[dict]:
         return list(self._manifest()["tables"][table]["snapshots"])
@@ -374,12 +386,10 @@ class GraphCatalog:
         a search-index sync, so the manifest is the contract."""
         if kind not in ("range", "fulltext"):
             raise ValueError("index kind must be 'range' or 'fulltext'")
-        m = self._manifest()
-        entries = m.setdefault("requested_indexes", [])
-        entry = {"label": label, "property": prop, "kind": kind,
-                 "ts": time.time()}
-        entries.append(entry)
-        self._save_manifest(m)
+        with self._commit() as m:
+            m.setdefault("requested_indexes", []).append(
+                {"label": label, "property": prop, "kind": kind,
+                 "ts": time.time()})
 
     def requested_indexes(self) -> List[dict]:
         return list(self._manifest().get("requested_indexes", []))
@@ -419,32 +429,31 @@ class GraphCatalog:
         of snapshots expired."""
         import shutil
 
-        m = self._manifest()
-        entry = m["tables"][table]
-        snaps = entry["snapshots"]
-        # keep_last=0 keeps only the current snapshot (snaps[-0:] would
-        # be the whole list)
-        keep = ({s["snapshot"] for s in snaps[-keep_last:]}
-                if keep_last > 0 else set())
-        keep.add(entry.get("current", len(snaps) - 1))
-        # a kept delta snapshot reads as its base chain: keep every
-        # chain member or the read would break
-        for idx in sorted(keep):
-            keep.update(self._delta_chain(entry, idx))
-        n = 0
-        for s in snaps:
-            idx = s["snapshot"]
-            if idx in keep or s.get("expired"):
-                continue
-            if self.fmt == "iceberg":
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._iceberg_ident(table, idx)}")
-            else:
-                shutil.rmtree(self._snapshot_path(table, idx),
-                              ignore_errors=True)
-            s["expired"] = True
-            n += 1
-        self._save_manifest(m)
+        with self._commit() as m:
+            entry = m["tables"][table]
+            snaps = entry["snapshots"]
+            # keep_last=0 keeps only the current snapshot (snaps[-0:]
+            # would be the whole list)
+            keep = ({s["snapshot"] for s in snaps[-keep_last:]}
+                    if keep_last > 0 else set())
+            keep.add(entry.get("current", len(snaps) - 1))
+            # a kept delta snapshot reads as its base chain: keep every
+            # chain member or the read would break
+            for idx in sorted(keep):
+                keep.update(self._delta_chain(entry, idx))
+            n = 0
+            for s in snaps:
+                idx = s["snapshot"]
+                if idx in keep or s.get("expired"):
+                    continue
+                if self.fmt == "iceberg":
+                    self.spark.sql(f"DROP TABLE IF EXISTS "
+                                   f"{self._iceberg_ident(table, idx)}")
+                else:
+                    shutil.rmtree(self._snapshot_path(table, idx),
+                                  ignore_errors=True)
+                s["expired"] = True
+                n += 1
         return n
 
     def compact(self, table: str, *, target_files: int = None) -> None:

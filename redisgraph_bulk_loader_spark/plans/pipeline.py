@@ -3,11 +3,15 @@
 documents(doc_id, spans) ->
   1. span-sequence validation (JVM-side invariant check)
   2. batched mention detection / triple extraction (mapInPandas)
-  3. entity linking: broadcast alias join; leftovers through
-     MinHash-LSH candidate blocking against canonical names
-  4. canonicalization: connected components (large-star/small-star)
-     over the surface<->canonical sameAs graph; component
-     representative = smallest canonical id
+  3. entity linking on the distinct surface vocabulary: broadcast
+     alias join; leftover entity surfaces through MinHash-LSH
+     candidate blocking against canonical names, patched onto the
+     vocabulary
+  4. canonicalization: connected components (driver union-find or
+     large-star/small-star) over the surface<->canonical sameAs graph;
+     component representative = smallest canonical id. Each surface's
+     final id is resolved on the vocabulary, and the mention stream
+     joins that surface -> canon map once per surface column
   5. dense node-ID assignment + label/reltype registries
   6. endpoint resolution (broadcast join) -> edges
   7. materialize nodes/edges/triples + per-stage lineage; per-predicate
@@ -29,48 +33,41 @@ from pyspark.sql import functions as F
 from ..canon.components import DRIVER_CC_THRESHOLD, min_id_components
 from ..extract import extract_mentions, validate_span_sequences
 from ..ids import build_node_registry
-from ..link import (
+# link_mentions is not called here; it stays a module attribute for the
+# layer tracer in perfbench/, which wraps it by name
+from ..link import (  # noqa: F401
     build_alias_dim,
     link_mentions,
+    link_vocabulary,
     lsh_candidate_pairs,
     patch_unresolved,
 )
 from ..materialize import GraphCatalog
-from ..operators.endpoints import BROADCAST_THRESHOLD_ROWS, resolve_endpoints
+from ..operators.endpoints import resolve_endpoints
 from ..operators.skew import two_phase_count
 
 
 def _lsh_extra_mappings_scoped(
-    mentions_linked: DataFrame, aliases: DataFrame, threshold: float
+    vocab: DataFrame, aliases: DataFrame, threshold: float
 ) -> Optional[DataFrame]:
-    """Resolve leftover surfaces via LSH against canonical surfaces;
+    """Resolve the linked vocabulary's leftover entity surfaces (null
+    ``canonical_id`` and ``ent``) via LSH against canonical surfaces;
     returns the extra (surface, canonical_id) mappings, or None when
-    every surface already resolved.
+    every such surface already resolved. Media-only surfaces never
+    reach LSH: a media ref is its own id.
 
     Its caches are scoped: the eager checkpoint at the end cuts
-    lineage, so the unresolved vocabulary and the shingle/signature
-    frames lsh_candidate_pairs pins are released here instead of living
-    for the session (persist hygiene, VERDICT r3 #3)."""
-    from ..cache import PinScope, pin
+    lineage, so the shingle/signature frames lsh_candidate_pairs pins
+    are released here instead of living for the session (persist
+    hygiene, VERDICT r3 #3)."""
+    from ..cache import PinScope
 
+    unresolved = vocab.filter(
+        F.col("canonical_id").isNull() & F.col("ent")).select("surface")
+    # one job over the pinned vocabulary
+    if unresolved.isEmpty():
+        return None
     with PinScope():
-        # Pinned: the isEmpty() probe below and the LSH prep both
-        # evaluate this frame, and its lineage is the full link pass
-        # over the mention stream — without the pin each consumer
-        # re-runs the mentions scan + broadcast joins. Dim-scale by
-        # construction (distinct unresolved surfaces).
-        unresolved = pin(
-            mentions_linked.filter(F.col("subj_cid").isNull())
-            .select(F.col("subj_surface").alias("surface"))
-            .union(
-                mentions_linked.filter(
-                    F.col("obj_cid").isNull() & (F.col("obj_kind") != "media")
-                ).select(F.col("obj_surface").alias("surface"))
-            )
-            .distinct()
-        )
-        if unresolved.isEmpty():
-            return None
         matches = lsh_candidate_pairs(
             unresolved,
             aliases,
@@ -85,10 +82,10 @@ def _lsh_extra_mappings_scoped(
             F.col("canonical_id_lsh").alias("canonical_id"),
         )
         # The LSH plan (minhash + banding over the unresolved
-        # vocabulary) is expensive; every consumer (augmented dim,
-        # canonicalization — which references the alias table twice)
-        # would re-execute it lazily. The result is dim-scale by
-        # construction: pin it once.
+        # vocabulary) is expensive; every consumer (augmented alias
+        # frame, patched vocabulary, canonicalization — which
+        # references the alias table twice) would re-execute it
+        # lazily. The result is dim-scale by construction: pin it once.
         return extra.localCheckpoint(eager=True)
 
 
@@ -240,80 +237,56 @@ def build_graph(
     scope.__enter__()
     try:
 
-        # 3. linking: the alias dim is normalized + broadcast ONCE per run
-        # (the rebuild was the measured per-run fixed cost). When mentions
-        # are staged to a table, the link output is NOT cached: recomputing
-        # it is a columnar scan + broadcast joins (cheap, codegen), while
-        # caching 10^12-scale wide rows costs executor memory + GC. The
-        # in-memory path keeps the persist so downstream actions don't
-        # re-run the Arrow extractor.
-        dim0 = build_alias_dim(aliases)
-        linked0 = link_mentions(mentions, dim=dim0)
-        if not staged:
-            linked0 = pin(linked0)
-        extra = _lsh_extra_mappings_scoped(linked0, aliases, lsh_threshold)
-        # No leftovers -> the first join IS the final linking. Leftovers ->
-        # patch only the null-cid rows from the (tiny, pinned) extra
-        # mappings instead of re-linking the whole mention stream.
+        # 3. linking, on the distinct surface vocabulary: normalize +
+        # look up each surface once (the vocabulary is pinned and
+        # counted for its broadcast gate, which the surface -> canon
+        # map below inherits). Leftover entity surfaces go through LSH,
+        # and their extra mappings patch the vocabulary — the mention
+        # stream is not touched again until step 4.
+        vocab, small = link_vocabulary(mentions, build_alias_dim(aliases))
+        extra = _lsh_extra_mappings_scoped(vocab, aliases, lsh_threshold)
         if extra is None:
             aliases_aug = aliases
-            linked = linked0
         else:
             aliases_aug = aliases.unionByName(extra)
-            linked = patch_unresolved(linked0, extra)
+            vocab = patch_unresolved(vocab, extra)
 
-        # 4. canonicalization via connected components. The remap has one
-        # row per canonical entity — broadcast only while it provably fits
-        # (billions of entities at 100x must shuffle-join instead).
-        remap = pin(canonicalize(aliases_aug))
-        n_remap = remap.count()
+        # 4. canonicalization via connected components, resolved on the
+        # vocabulary: surface -> canon = remap(canonical_id), or the
+        # canonical_id itself. The remap has at most one row per
+        # alias-table canonical id (the augmented alias frame's ids are
+        # alias-table ids), so it is dim-scale exactly like the alias
+        # dim build_alias_dim broadcasts: broadcast it unconditionally.
+        remap = canonicalize(aliases_aug)
+        canon = vocab.join(F.broadcast(remap), "canonical_id", "left").select(
+            "surface", F.coalesce("canon_id", "canonical_id").alias("canon"))
+        if small:
+            canon = F.broadcast(canon)
 
-        def _mb(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if n_remap <= BROADCAST_THRESHOLD_ROWS else df
-
-        linked = (
-            linked.join(
-                _mb(remap.withColumnRenamed("canonical_id", "subj_cid")
-                    .withColumnRenamed("canon_id", "subj_canon")),
-                "subj_cid",
-                "left",
+        # triples: the mention stream joins the map once per surface
+        # column; a media object is its own id. Resolved mentions only,
+        # deduped on (subj, pred, obj).
+        linked = mentions
+        for col, out in (("subj_surface", "subj"), ("obj_surface", "_obj")):
+            linked = linked.join(
+                canon.select(F.col("surface").alias(col),
+                             F.col("canon").alias(out)),
+                col, "left")
+        triples = pin(
+            linked.select(
+                "doc_id", "subj", "pred",
+                F.when(F.col("obj_kind") == "media", F.col("obj_surface"))
+                .otherwise(F.col("_obj")).alias("obj"),
+                "obj_kind",
             )
-            .join(
-                _mb(remap.withColumnRenamed("canonical_id", "obj_cid")
-                    .withColumnRenamed("canon_id", "obj_canon")),
-                "obj_cid",
-                "left",
-            )
-            .withColumn("subj_canon", F.coalesce("subj_canon", "subj_cid"))
-            .withColumn(
-                "obj_canon",
-                F.when(F.col("obj_kind") == "media", F.col("obj_cid")).otherwise(
-                    F.coalesce("obj_canon", "obj_cid")
-                ),
-            )
+            .filter(F.col("subj").isNotNull() & F.col("obj").isNotNull())
         )
-
-        # triples: resolved mentions only, deduped on (subj, pred, obj)
-        triples = (
-            linked.filter(
-                F.col("subj_canon").isNotNull() & F.col("obj_canon").isNotNull()
-            )
-            .select(
-                F.col("doc_id"),
-                F.col("subj_canon").alias("subj"),
-                F.col("pred"),
-                F.col("obj_canon").alias("obj"),
-                F.col("obj_kind"),
-            )
-        )
-        triples = pin(triples)
         distinct_triples = pin(triples.dropDuplicates(["subj", "pred", "obj"]))
 
         # 5. node registry: every canonical entity/place/media object
         node_ext = (
-            triples.select(F.col("subj").alias("ext_id"), F.lit("entity").alias("label"))
-            .union(triples.select(F.col("obj").alias("ext_id"), F.col("obj_kind")))
-            .dropDuplicates(["ext_id"])
+            triples.select(F.explode(F.array("subj", "obj")).alias("ext_id"))
+            .distinct()
             .withColumn(
                 "label",
                 F.when(F.col("ext_id").startswith("place:"), "place")

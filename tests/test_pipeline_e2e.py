@@ -138,8 +138,13 @@ class TestPipeline:
 
 
 class TestDenseIds:
-    def test_partition_count_invariance(self, spark, docs):
-        # analogue of the reference's batched-build identity test
+    def test_partition_count_invariance(self, spark, docs, monkeypatch):
+        # analogue of the reference's batched-build identity test; a
+        # zero size gate sends these rows down the range-partition path,
+        # the only one num_partitions reaches
+        from redisgraph_bulk_loader_spark.canon import components
+
+        monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 0)
         base = docs.select("doc_id")
         a = assign_dense_ids(base, ["doc_id"], num_partitions=2).collect()
         b = assign_dense_ids(base, ["doc_id"], num_partitions=13).collect()
@@ -147,6 +152,35 @@ class TestDenseIds:
         mb = {r.doc_id: r.internal_id for r in b}
         assert ma == mb
         assert sorted(ma.values()) == list(range(len(ma)))
+
+    def test_gate_branches_agree(self, spark, monkeypatch):
+        """The global-window branch (at or under the size gate) and the
+        range-partition branch number the same rows identically: string
+        and integral order keys, a null in an order column (nulls sort
+        first), a nonzero ``start``, LONG ids on both."""
+        from redisgraph_bulk_loader_spark.canon import components
+
+        rows = [("b", 2), ("a", 7), (None, 3), ("a", 1), ("c", None),
+                ("b", 0)] * 3
+        df = spark.createDataFrame(
+            [(lab, i, k) for k, (lab, i) in enumerate(rows)],
+            "label string, row_idx int, k long",
+        )
+        order = ["label", "row_idx", "k"]
+
+        def ids():
+            out = assign_dense_ids(df, order, start=5, num_partitions=3)
+            assert out.schema["internal_id"].dataType.simpleString() == \
+                "bigint"
+            return sorted((r.k, r.internal_id) for r in out.collect())
+
+        window = ids()
+        monkeypatch.setattr(components, "DRIVER_CC_THRESHOLD", 0)
+        assert ids() == window
+        assert sorted(i for _, i in window) == list(range(5, 5 + 18))
+        first = dict(window)
+        nulls = [r.k for r in df.filter(F.col("label").isNull()).collect()]
+        assert sorted(first[k] for k in nulls) == [5, 6, 7]
 
     def test_last_wins_registry(self, spark):
         df = spark.createDataFrame(
@@ -221,3 +255,31 @@ class TestFullResumeShortCircuit:
         # derived registries still come back
         assert second["labels"].count() == first["labels"].count()
         assert second["rel_types"].count() == first["rel_types"].count()
+
+
+class TestJobBudget:
+    #: Spark jobs one catalog build_graph starts over this corpus (every
+    #: size gate on its small side); kg builds repeat their job count
+    #: exactly, so any added job fails here
+    BUILD_JOBS = 40
+
+    def test_build_and_resume_job_counts(self, spark, tmp_path):
+        from redisgraph_bulk_loader_spark.cache import release_pins
+        from redisgraph_bulk_loader_spark.materialize import GraphCatalog
+
+        def jobs(fn):
+            sc = spark.sparkContext._jsc.sc()
+            j0 = int(sc.dagScheduler().nextJobId())
+            fn()
+            return int(sc.dagScheduler().nextJobId()) - j0
+
+        docs = synthesize_documents(spark, 200, seed=7, partitions=2)
+        cat = GraphCatalog(spark, str(tmp_path / "cat"))
+        build = jobs(lambda: build_graph(spark, docs, alias_table(spark), cat))
+        release_pins()
+        fp = jobs(lambda: GraphCatalog.fingerprint_df(
+            docs.select("doc_id", "spans")))
+        resume = jobs(lambda: build_graph(spark, docs, alias_table(spark),
+                                          cat))
+        assert build <= self.BUILD_JOBS
+        assert resume == fp

@@ -94,11 +94,12 @@ class TestPlanShapes:
         assert a == b
 
     def test_patch_unresolved_equals_full_relink(self, spark):
-        """patch_unresolved (null-cid rows only) must equal re-running
-        link_mentions with the augmented dictionary."""
+        """patch_unresolved (null-id vocabulary rows only) must equal
+        relinking the vocabulary with the augmented dictionary."""
         from redisgraph_bulk_loader_spark.link import (
             augment_alias_dim,
             build_alias_dim,
+            link_vocabulary,
             patch_unresolved,
         )
 
@@ -114,23 +115,25 @@ class TestPlanShapes:
         aliases = spark.createDataFrame(
             [("Ada", "e1"), ("Bob", "e2")], "surface string, canonical_id string"
         )
+        # "ADA" collides with a resolved surface (the dim entry wins);
+        # two extras for "Grace" resolve to the min id
         extra = spark.createDataFrame(
-            [("Grace", "e3"), ("Unknown Guy", "e9")],
+            [("Grace", "e4"), ("Grace", "e3"), ("Unknown Guy", "e9"),
+             ("ADA", "e0")],
             "surface string, canonical_id string",
         )
         dim0 = build_alias_dim(aliases)
-        linked0 = link_mentions(mentions, dim=dim0)
-        patched = patch_unresolved(linked0, extra)
-        full = link_mentions(mentions, dim=augment_alias_dim(dim0, extra))
-        cols = ["doc_id", "span_offset", "subj_cid", "obj_cid"]
-        a = sorted(tuple(r) for r in patched.select(*cols).collect())
-        b = sorted(tuple(r) for r in full.select(*cols).collect())
+        vocab0, _ = link_vocabulary(mentions, dim0)
+        patched = patch_unresolved(vocab0, extra)
+        full, _ = link_vocabulary(mentions, augment_alias_dim(dim0, extra))
+        a = sorted(tuple(r) for r in patched.collect())
+        b = sorted(tuple(r) for r in full.collect())
         assert a == b
-        # resolved rows really did resolve
-        got = {(r.doc_id, r.span_offset): (r.subj_cid, r.obj_cid)
-               for r in patched.collect()}
-        assert got[("d1", 1)] == ("e3", "e1")
-        assert got[("d2", 0)] == ("e9", "img://x")
+        # resolved rows really did resolve; the media ref stays unlinked
+        assert {r.surface: (r.ent, r.canonical_id) for r in patched.collect()} \
+            == {"Ada": (True, "e1"), "ada": (True, "e1"), "Bob": (True, "e2"),
+                "Grace": (True, "e3"), "Unknown Guy": (True, "e9"),
+                "img://x": (False, None)}
 
     def test_alias_dim_ambiguous_surface_takes_min_id(self, spark):
         """VERDICT r3 #2: two aliases normalizing to the same surface
@@ -460,3 +463,57 @@ class TestLshLinker:
         triples = {(r.subj, r.pred, r.obj) for r in res["triples"].collect()}
         release_pins()
         assert triples == {("ent_00000", "knows", "ent_00030")}
+
+    @staticmethod
+    def _build(spark, monkeypatch, rows):
+        """build_graph over a prepared mention stream (the extractor's
+        grammar never emits a media surface that is not an img:// ref),
+        recording every frame handed to the LSH linker."""
+        from redisgraph_bulk_loader_spark.cache import release_pins
+        from redisgraph_bulk_loader_spark.extract.triples import MENTION_SCHEMA
+        from redisgraph_bulk_loader_spark.plans import build_graph, pipeline
+        from redisgraph_bulk_loader_spark.sources import alias_table
+        from redisgraph_bulk_loader_spark.sources.documents import (
+            DOCUMENTS_SCHEMA,
+        )
+
+        mentions = spark.createDataFrame(rows, MENTION_SCHEMA)
+        monkeypatch.setattr(pipeline, "extract_mentions", lambda _d: mentions)
+        sent = []
+        lsh = pipeline.lsh_candidate_pairs
+
+        def spy(left, *args, **kwargs):
+            sent.extend(r.surface for r in left.collect())
+            return lsh(left, *args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "lsh_candidate_pairs", spy)
+        docs = spark.createDataFrame(
+            [("d1", [("text", "x", "", 0)])], DOCUMENTS_SCHEMA)
+        res = build_graph(spark, docs, alias_table(spark))
+        triples = {(r.subj, r.pred, r.obj) for r in res["triples"].collect()}
+        release_pins()
+        return triples, sent
+
+    def test_media_only_typo_never_reaches_lsh(self, spark, monkeypatch):
+        """A media object is its own id: a media-only surface one letter
+        away from an alias is not an unresolved entity."""
+        triples, sent = self._build(spark, monkeypatch, [
+            ("d1", 0, "Ada Lovelace", "knows", "Grace Hopper", "entity"),
+            ("d2", 0, "Grace Hopper", "has_media", "Ada Lovelaxe", "media"),
+        ])
+        assert sent == []
+        assert triples == {("ent_00000", "knows", "ent_00030"),
+                           ("ent_00030", "has_media", "Ada Lovelaxe")}
+
+    def test_subject_and_media_surface_links_as_subject(self, spark,
+                                                        monkeypatch):
+        """A surface used both as a subject and as a media object is an
+        entity surface: LSH links its subject use, and its media use
+        stays its own object id."""
+        triples, sent = self._build(spark, monkeypatch, [
+            ("d1", 0, "Ada Lovelaxe", "knows", "Grace Hopper", "entity"),
+            ("d2", 0, "Grace Hopper", "has_media", "Ada Lovelaxe", "media"),
+        ])
+        assert sent == ["Ada Lovelaxe"]
+        assert triples == {("ent_00000", "knows", "ent_00030"),
+                           ("ent_00030", "has_media", "Ada Lovelaxe")}

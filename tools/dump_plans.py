@@ -65,6 +65,7 @@ def dump_operators(spark, sf_dir: str) -> None:
     from redisgraph_bulk_loader_spark.link import (
         build_alias_dim,
         link_mentions,
+        link_vocabulary,
         lsh_candidate_pairs,
     )
     from redisgraph_bulk_loader_spark.operators.dedup import (
@@ -97,7 +98,9 @@ def dump_operators(spark, sf_dir: str) -> None:
 
     docs = synthesize_documents(spark, 200, seed=42)
     mentions = extract_mentions(docs)
-    linked = link_mentions(mentions, dim=build_alias_dim(alias_table(spark)))
+    dim = build_alias_dim(alias_table(spark))
+    vocab, _ = link_vocabulary(mentions, dim, broadcast_vocab=True)
+    linked = link_mentions(mentions, dim=dim)
 
     reg = spark.createDataFrame(
         [(str(i), i) for i in range(50)], "ext_id string, internal_id long"
@@ -109,8 +112,17 @@ def dump_operators(spark, sf_dir: str) -> None:
         "surface string")
 
     sections = [
-        ("Extraction + broadcast alias linking (Arrow batch -> "
-         "BroadcastHashJoin; the only Python on the data path)",
+        ("Linked surface vocabulary (link_vocabulary, what build_graph "
+         "links, patches and canonicalizes; pinned by the auto "
+         "broadcast gate): one mention scan explodes "
+         "both surface columns into a map-side-combined aggregate; "
+         "normalize runs on distinct surfaces only; BroadcastHashJoin "
+         "against the alias dim",
+         vocab),
+        ("Extraction + broadcast alias linking (link_mentions: the "
+         "linked vocabulary broadcast back to the stream, one "
+         "BroadcastHashJoin per surface column; the Arrow batch is the "
+         "only Python on the data path)",
          linked),
         ("Endpoint resolution, broadcast strategy (small registry)",
          resolve_endpoints(edges, reg, skip_invalid=True,
@@ -130,8 +142,7 @@ def dump_operators(spark, sf_dir: str) -> None:
         ("Alias linking with the vocabulary broadcast gate OFF (the "
          "shuffle-join fallback that replaces the resolved-vocab "
          "broadcast above BROADCAST_THRESHOLD_ROWS)",
-         link_mentions(mentions, dim=build_alias_dim(alias_table(spark)),
-                       broadcast_vocab=False)),
+         link_mentions(mentions, dim=dim, broadcast_vocab=False)),
         ("kg LSH linker: one-letter typos of stock surfaces against the "
          "alias table — MinHash bands on both pinned signature frames, "
          "bucket-cap anti join, band equi-join, key-pair dedup before "
