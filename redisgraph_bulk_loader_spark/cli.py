@@ -11,11 +11,13 @@ session + an output catalog directory:
         --query "row[0] AS ext_id, row[1] AS name" [--no-header]
 
 Flags the reference exposes but that have no meaning without a Redis
-server (--redis-url; the buffer-size trio) are accepted for drop-in
-compatibility: the buffer sizes still flow into Config's validation
-envelope (identical error messages), --redis-url is ignored with a
-note. ``--index`` / ``--full-text-index`` record requested indexes in
-the catalog manifest after the graph tables are written, matching the
+server (--redis-url; the buffer-size trio; the updater's
+--max-token-size) are accepted for drop-in compatibility: the insert
+buffer sizes still flow into Config's validation envelope (identical
+error messages), --redis-url is ignored with a note, and the updater
+applies its rows as one MERGE whatever --max-token-size says.
+``--index`` / ``--full-text-index`` record requested indexes in the
+catalog manifest after the graph tables are written, matching the
 reference's post-load index creation order (bulk_insert.py:235-263).
 """
 
@@ -193,7 +195,8 @@ def _update_parser() -> argparse.ArgumentParser:
     ap.add_argument("--separator", "-o", default=",")
     ap.add_argument("--no-header", "-n", action="store_true")
     ap.add_argument("--max-token-size", "-t", type=int, default=500,
-                    help="batch bound, interpreted as 1000 rows per MB")
+                    help="accepted for compatibility; sizes nothing (the "
+                         "update is applied as one MERGE)")
     ap.add_argument("--key-cols", default="ext_id",
                     help="comma-separated MERGE key columns "
                          "(the Spark analogue of the Cypher MERGE pattern); "
@@ -302,7 +305,6 @@ def update_main(argv: Optional[list] = None) -> int:
         edges = catalog.read("edges") if catalog.exists("edges") else None
         nodes2, edges2 = run_edge_update_query(
             spark, existing, edges, rows, args.query,
-            variable_name=args.variable_name,
             rel_type=args.rel_type, dest_label=args.label,
             key_col=key_cols[0], dest_mode=args.dest_mode,
             dedup_edges=args.merge_edges,
@@ -324,16 +326,12 @@ def update_main(argv: Optional[list] = None) -> int:
         # fold into props_json, unmatched keys create labeled nodes
         merged = run_node_merge_query(
             spark, existing, rows, args.query,
-            variable_name=args.variable_name,
             key_col=key_cols[0], label=args.label,
             projected_key_col=requested_key,
         )
     else:
         merged = run_update_query(
-            spark, existing, rows, args.query,
-            variable_name=args.variable_name,
-            key_cols=key_cols,
-            max_rows_per_batch=args.max_token_size * 1000,
+            spark, existing, rows, args.query, key_cols=key_cols,
         )
     catalog.write("nodes", merged, stage="update",
                   partition_by=catalog.current_partition_by("nodes"),

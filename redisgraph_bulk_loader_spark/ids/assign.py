@@ -111,9 +111,10 @@ def detect_duplicates(
     if strict:
         sample = dups.limit(1).collect()
         if sample:
+            key = tuple(sample[0][c] for c in key_cols)
+            shown = f"'{key[0]}'" if len(key) == 1 else str(key)
             raise SchemaError(
-                f"Node identifier {tuple(sample[0][c] for c in key_cols)} "
-                f"was used multiple times"
+                f"Node identifier {shown} was used multiple times"
             )
     return nodes
 
@@ -134,10 +135,31 @@ def build_node_registry(
         nodes.select(*dict.fromkeys(key_cols + order_cols)),
         order_cols,
     )
-    w = Window.partitionBy(*key_cols).orderBy(F.col("internal_id").desc())
+    return latest_per_key(ordered, key_cols, "internal_id").select(
+        *key_cols, "internal_id")
+
+
+def latest_per_key(df: DataFrame, key_cols: List[str],
+                   order_col: str) -> DataFrame:
+    """The last-occurrence rule: per ``key_cols``, the row with the
+    largest ``order_col`` (the reference applies rows in file order, so
+    its id dict and its MERGE both end on the latest row, label.py:60-61,
+    bulk_update.py:106-119). Returns ``df``'s columns."""
+    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
     return (
-        ordered.withColumn("_rk", F.row_number().over(w))
+        df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
         .drop("_rk")
-        .select(*key_cols, "internal_id")
     )
+
+
+def assign_ids_after(existing: DataFrame, df: DataFrame,
+                     order_cols: List[str], *,
+                     id_col: str = "internal_id") -> DataFrame:
+    """Number ``df``'s rows densely in ``order_cols`` order, after the
+    largest ``internal_id`` of ``existing`` (from 0 when it has none):
+    the ids an update gives the nodes it creates."""
+    max_id = (existing.agg(F.max("internal_id")).first()[0]
+              if "internal_id" in existing.columns else None)
+    start = 0 if max_id is None else max_id + 1
+    return assign_dense_ids(df, order_cols, id_col=id_col, start=start)

@@ -35,8 +35,8 @@ from pyspark.sql.types import (
 )
 
 from ..config import Config
-from ..exceptions import CSVError, SchemaError
-from ..ids import assign_dense_ids
+from ..exceptions import CSVError
+from ..ids import assign_dense_ids, detect_duplicates
 from ..kernel.typing_kernel import TAG_NULL, canonical_literal, cast_cell, infer_cell
 from ..schema import ColumnPlan, HType, parse_header
 from ..sources.csv_source import _read_header
@@ -541,18 +541,8 @@ def bulk_insert(
     with_ids = pin(assign_dense_ids(all_nodes, ["file_idx", "row_idx"]))
 
     # duplicate identifiers
-    if cfg.store_node_identifiers:
-        dups = (
-            with_ids.groupBy("key").agg(F.count("*").alias("n"))
-            .filter(F.col("n") > 1)
-        )
-        if not cfg.skip_invalid_nodes:
-            sample = dups.limit(1).collect()
-            if sample:
-                raise SchemaError(
-                    f"Node identifier '{sample[0]['key']}' was used "
-                    f"multiple times"
-                )
+    if cfg.store_node_identifiers and not cfg.skip_invalid_nodes:
+        detect_duplicates(with_ids, ["key"], strict=True)
     registry = (
         with_ids.groupBy("key").agg(F.max("internal_id").alias("internal_id"))
     )  # last occurrence wins (max internal id == latest row)

@@ -32,9 +32,10 @@ from pyspark.sql import functions as F
 
 from ..canon.components import DRIVER_CC_THRESHOLD, min_id_components
 from ..extract import extract_mentions, validate_span_sequences
-from ..ids import build_node_registry
-# link_mentions is not called here; it stays a module attribute for the
-# layer tracer in perfbench/, which wraps it by name
+# build_node_registry and link_mentions are not called here; they stay
+# module attributes for the layer tracer in perfbench/, which wraps
+# them by name
+from ..ids import assign_dense_ids, build_node_registry  # noqa: F401
 from ..link import (  # noqa: F401
     build_alias_dim,
     link_mentions,
@@ -294,10 +295,11 @@ def build_graph(
                 .otherwise("entity"),
             )
         )
-        registry = pin(build_node_registry(
-            node_ext, ["ext_id"], ["label", "ext_id"]
-        ))
-        nodes = node_ext.join(registry, "ext_id").select("internal_id", "label", "ext_id")
+        # node_ext is distinct on ext_id, so the ids need no last-wins
+        # pass and nodes and the registry are two projections of them
+        ided = pin(assign_dense_ids(node_ext, ["label", "ext_id"]))
+        nodes = ided.select("internal_id", "label", "ext_id")
+        registry = ided.select("ext_id", "internal_id")
 
         # 6. endpoint resolution -> edges with internal ids. Strategy is
         # size-gated (broadcast vs salted shuffle) on the registry count,

@@ -1,4 +1,4 @@
-"""Bulk-update compatibility: batched incremental graph updates.
+"""Bulk-update compatibility: incremental graph updates.
 
 The reference's updater (studied at /root/reference/
 redisgraph_bulk_loader/bulk_update.py) reads a CSV, quotes each cell
@@ -15,12 +15,12 @@ Spark mapping:
   — ``cell.lower != "]"`` compares a bound method, always truthy
   (bulk_update.py:67) — we implement the documented intent, not the
   bug.)
-- ``validate_update_plan``: dry-run analysis of the update's plan on an
-  empty frame — the GRAPH.EXPLAIN analogue; catches schema errors
-  before any batch is applied.
-- ``apply_updates``: micro-batched MERGE into the nodes table via
-  incremental_graph_update; each batch is an independent commit
-  (incremental semantics preserved).
+- ``run_update_query`` / ``run_node_merge_query`` /
+  ``run_edge_update_query``: the row fragment is analyzed when the call
+  is made (the GRAPH.EXPLAIN analogue), then applied as one MERGE. The
+  reference splits rows into token-size batches only because each batch
+  is a separate server query; here nothing commits between batches, so
+  one MERGE gives the same rows.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ids import assign_ids_after, latest_per_key
 from ..streaming.stream import incremental_graph_update
 
 
@@ -75,68 +76,6 @@ def quote_col(col):
         .when(arr | quoted, v)
         .otherwise(F.concat(F.lit('"'), v, F.lit('"')))
     )
-
-
-def validate_update_plan(existing: DataFrame, updates: DataFrame,
-                         key_cols: List[str]) -> None:
-    """Compile-time validation (GRAPH.EXPLAIN analogue): analyze the
-    merged plan against an empty slice of the updates; raises
-    AnalysisException on schema mismatch before any data is written."""
-    empty = updates.limit(0)
-    incremental_graph_update(existing, empty, key_cols).explain(mode="cost")
-
-
-def apply_updates(
-    existing: DataFrame,
-    updates: DataFrame,
-    key_cols: List[str],
-    *,
-    max_rows_per_batch: int = 100_000,
-    order_col: str = None,
-    checkpoint_every: int = 8,
-) -> DataFrame:
-    """Batched MERGE: split updates into size-bounded batches and apply
-    sequentially in input order (the reference's max-token-size batching
-    analogue, bulk_update.py:106-119). Returns the final nodes frame.
-
-    Batch membership is pinned by an eager localCheckpoint on the batched
-    frame, so it cannot change across plan re-evaluation or task retry,
-    and batches follow ``order_col`` (cross-batch last-wins == sequential
-    row order). Lineage is re-checkpointed every ``checkpoint_every``
-    batches so hundreds of stacked MERGE plans don't accumulate.
-
-    Update CSVs are dim-scale in the reference (<= the 100k-row largest
-    tested load); the single-partition row_number here is bounded by that,
-    not by the fact tables.
-    """
-    from pyspark.sql import Window
-
-    if order_col is None:
-        if "row_idx" in updates.columns:
-            order_col = "row_idx"
-        else:
-            # Partition-ordered surrogate for file order; pinned below.
-            updates = updates.withColumn(
-                "_row_idx", F.monotonically_increasing_id())
-            order_col = "_row_idx"
-    w = Window.orderBy(F.col(order_col))
-    batched = updates.withColumn(
-        "_b",
-        ((F.row_number().over(w) - F.lit(1)) / F.lit(max_rows_per_batch))
-        .cast("long"),
-    ).localCheckpoint(eager=True)
-    n_batches = (batched.agg(F.max("_b")).first()[0] or 0) + 1
-    if n_batches == 1:
-        return incremental_graph_update(
-            existing, batched.drop("_b"), key_cols, order_col=order_col)
-    current = existing
-    for b in range(n_batches):
-        batch = batched.filter(F.col("_b") == b).drop("_b")
-        current = incremental_graph_update(current, batch, key_cols,
-                                           order_col=order_col)
-        if (b + 1) % checkpoint_every == 0 and b + 1 < n_batches:
-            current = current.localCheckpoint(eager=False)
-    return current
 
 
 # ---------------------------------------------------------------------------
@@ -246,35 +185,25 @@ def upsert_nodes(
     the loader's json.dumps, so byte-level fingerprints of touched
     rows change even on a value-level no-op update.
     Update CSVs are dim-scale in the reference (<= the 100k-row
-    largest tested load); the global row_number and driver-side
-    max(internal_id) lookup are bounded by that, not by fact tables.
+    largest tested load); the driver-side max(internal_id) lookup and
+    the fresh-id numbering are bounded by that, not by fact tables.
     """
-    from pyspark.sql import Window
-
     prop_cols = [c for c in projected.columns
                  if c not in (key_col, order_col)]
-    w = Window.partitionBy(key_col).orderBy(F.col(order_col).desc())
-    upd = (
-        projected.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .drop("_rk")
-        .withColumn("_new_props", _props_map(prop_cols))
-    )
+    upd = latest_per_key(projected, [key_col], order_col).withColumn(
+        "_new_props", _props_map(prop_cols))
     # Match against the last-wins registry view: the loader keeps every
     # row under duplicate identifiers (skip_invalid_nodes), but the
     # mapping points at the latest occurrence (label.py:60-61) — the
     # MERGE must update that row once, not fan out per duplicate.
-    w_reg = Window.partitionBy(key_col).orderBy(F.col("_eid").desc())
-    reg_view = (
+    reg_view = latest_per_key(
         existing_nodes.select(
             F.col(key_col),
             F.col("internal_id").alias("_eid"),
             F.col("label").alias("_elabel"),
             F.col("props_json").alias("_eprops"),
-        )
-        .withColumn("_rr", F.row_number().over(w_reg))
-        .filter(F.col("_rr") == 1)
-        .drop("_rr")
+        ),
+        [key_col], "_eid",
     )
     joined = upd.join(reg_view, key_col, "left")
     old_map = F.from_json(F.coalesce(F.col("_eprops"), F.lit("{}")),
@@ -284,33 +213,35 @@ def upsert_nodes(
         F.map_filter(old_map, lambda k, v: ~F.array_contains(provided, k)),
         F.col("_new_props"),
     )
-    max_id = (existing_nodes.agg(F.max("internal_id")).first()[0]
-              if "internal_id" in existing_nodes.columns else None)
-    next_id = (max_id if max_id is not None else -1) + 1
+    joined = joined.withColumn("props_json", F.to_json(merged))
+    matched = joined.filter(F.col("_eid").isNotNull()).withColumn(
+        "internal_id", F.col("_eid"))
+    created = assign_ids_after(
+        existing_nodes, joined.filter(F.col("_eid").isNull()), [order_col])
     merged_rows = (
-        joined.withColumn("props_json", F.to_json(merged))
-        .withColumn(
-            "internal_id",
-            F.coalesce(
-                F.col("_eid"),
-                F.lit(next_id - 1)
-                + F.row_number().over(
-                    Window.partitionBy(F.col("_eid").isNull())
-                    .orderBy(F.col(order_col))
-                ),
-            ),
-        )
+        matched.unionByName(created)
         .withColumn("label", F.coalesce(F.col("_elabel"), F.lit(label)))
         .select(*existing_nodes.columns)
     )
     # Remove only the specific matched rows (latest per key): other
     # duplicate rows under a reused identifier stay untouched, exactly
     # like the reference graph where each CSV row remains its own node.
-    matched_ids = joined.filter(F.col("_eid").isNotNull()).select(
-        F.col("_eid").alias("internal_id")
-    )
-    kept = existing_nodes.join(matched_ids, ["internal_id"], "left_anti")
+    kept = existing_nodes.join(matched.select("internal_id"), ["internal_id"],
+                               "left_anti")
     return kept.unionByName(merged_rows)
+
+
+def _project_rows(spark: SparkSession, rows: DataFrame,
+                  query: str) -> DataFrame:
+    """``SELECT <query>, row_idx`` over the update rows, analyzed now:
+    a malformed fragment raises AnalysisException before anything is
+    written (the GRAPH.EXPLAIN analogue, bulk_update.py:76-80).
+    Analysis starts no Spark job."""
+    view = "_rgbl_update_rows"
+    rows.createOrReplaceTempView(view)
+    projected = spark.sql(f"SELECT {query}, row_idx FROM {view}")
+    projected.columns  # force analysis
+    return projected
 
 
 def run_update_query(
@@ -319,33 +250,22 @@ def run_update_query(
     rows: DataFrame,
     query: str,
     *,
-    variable_name: str = "row",
     key_cols: List[str],
-    max_rows_per_batch: int = 100_000,
 ) -> DataFrame:
     """Spark analogue of the reference's ``UNWIND $rows AS <var>
     <query>`` (bulk_update.py:37,106-119): ``query`` is an ANSI-SQL
-    select list over the row variable — e.g.
-    ``"{v}[0] AS ext_id, CAST({v}[1] AS INT) AS age"`` with ``{v}`` =
-    ``variable_name`` and 0-based cell access, mirroring Cypher's
-    ``row[0]`` — projected once per row and MERGEd into ``existing``
-    on ``key_cols`` in row order (last occurrence wins).
+    select list over the row variable read by ``read_update_csv`` —
+    e.g. ``"row[0] AS ext_id, CAST(row[1] AS INT) AS age"`` with 0-based
+    cell access, mirroring Cypher's ``row[0]`` — projected once per row
+    and MERGEd into ``existing`` on ``key_cols`` in row order (last
+    occurrence wins). Returns the lazy merged frame.
 
     Documented restriction vs the reference: the fragment is a row
     projection + MERGE, not arbitrary Cypher graph mutation; that is
-    the shape every reference test exercises (test_bulk_update.py).
-
-    Compile-time validation (the GRAPH.EXPLAIN analogue,
-    bulk_update.py:76-80) happens when the projection is analyzed —
-    a malformed fragment raises AnalysisException before any batch is
-    applied."""
-    view = "_rgbl_update_rows"
-    rows.createOrReplaceTempView(view)
-    projected = spark.sql(f"SELECT {query}, row_idx FROM {view}")
-    projected.limit(0).columns  # force analysis: fail before any write
-    return apply_updates(
-        existing, projected, key_cols,
-        max_rows_per_batch=max_rows_per_batch, order_col="row_idx",
+    the shape every reference test exercises (test_bulk_update.py)."""
+    return incremental_graph_update(
+        existing, _project_rows(spark, rows, query), key_cols,
+        order_col="row_idx",
     )
 
 
@@ -355,7 +275,6 @@ def run_node_merge_query(
     rows: DataFrame,
     query: str,
     *,
-    variable_name: str = "row",
     key_col: str = "key",
     label: str = "N",
     projected_key_col: Optional[str] = None,
@@ -367,10 +286,8 @@ def run_node_merge_query(
     with fresh internal ids and ``label``. ``projected_key_col`` lets a
     query written against the reference's ext_id naming address a table
     keyed by ``key``. Compile-time validation as in run_update_query."""
-    view = "_rgbl_merge_rows"
-    rows.createOrReplaceTempView(view)
-    projected = spark.sql(f"SELECT {query}, row_idx FROM {view}")
-    cols = projected.limit(0).columns  # force analysis before any write
+    projected = _project_rows(spark, rows, query)
+    cols = projected.columns
     if key_col not in cols:
         if projected_key_col and projected_key_col in cols:
             projected = projected.withColumnRenamed(projected_key_col,
@@ -397,8 +314,7 @@ def merge_edges(
     dest_label: str = "N",
     key_col: str = "key",
     order_col: str = "row_idx",
-    create_dest: bool = True,
-    dest_mode: Optional[str] = None,
+    dest_mode: str = "merge",
     dedup_edges: bool = False,
 ):
     """The reference's traversal-update shape — ``MATCH (src {id:
@@ -414,13 +330,11 @@ def merge_edges(
          even when a node with the same key exists, and that row's edge
          points at the row's own fresh node (the reference counts
          "Nodes created: 3" for 3 rows regardless of key collisions);
-       - ``'merge'``: dest keys are MERGEd (created if absent,
+       - ``'merge'`` (default): dest keys are MERGEd (created if absent,
          property-SET if present) — the batch-friendly variant that
          never duplicates keyed nodes;
        - ``'none'``: no dest handling; rows whose dst key is missing
          are dropped (MATCH-both semantics).
-       ``create_dest`` is the legacy boolean spelling (True -> 'merge',
-       False -> 'none'); ``dest_mode`` wins when given.
     3. edges (src_internal, dst_internal, rel_type, props_json) are
        appended — CREATE semantics; ``dedup_edges=True`` gives Cypher
        MERGE semantics instead: the NEW edges are deduped on
@@ -437,12 +351,8 @@ def merge_edges(
     an earlier row of the same CSV is not visible to later rows' src
     MATCH (no reference test exercises that shape).
     """
-    from pyspark.sql import Window
-
     from ..operators.endpoints import resolve_endpoints
 
-    if dest_mode is None:
-        dest_mode = "merge" if create_dest else "none"
     if dest_mode not in ("create", "merge", "none"):
         raise ValueError("dest_mode must be 'create', 'merge', or 'none'")
 
@@ -455,31 +365,20 @@ def merge_edges(
     prop_cols = [c for c in matched.columns
                  if c not in (src_col, dst_col, order_col)]
 
-    w_src = Window.partitionBy("ext_id").orderBy(F.col("internal_id").desc())
-    src_registry = (
-        nodes.select(F.col(key_col).alias("ext_id"), "internal_id")
-        .withColumn("_rr", F.row_number().over(w_src))
-        .filter(F.col("_rr") == 1)
-        .drop("_rr")
-    )
+    def registry(frame):
+        # Last-wins per key: under a reused identifier the reference's
+        # id dict points at the latest occurrence — without it a
+        # duplicate key would fan each edge row into multiple edges.
+        return latest_per_key(
+            frame.select(F.col(key_col).alias("ext_id"), "internal_id"),
+            ["ext_id"], "internal_id")
 
     if dest_mode == "create":
         # Reference CREATE: one fresh node per row; the row's edge
-        # targets that exact node. Ids come from the same rerun-stable
-        # partition-prefix-sum assigner the loader uses (ADVICE r4: a
-        # global row_number Window funnels the whole update CSV through
-        # one task — assign_dense_ids keeps both jobs parallel and is
-        # ordering-identical: start = max_id + 1 matches the old
-        # 1-based row_number over order_col). The driver-side max-id
-        # lookup stays a single-row agg.
-        from ..ids import assign_dense_ids
-
-        max_id = (nodes.agg(F.max("internal_id")).first()[0]
-                  if "internal_id" in nodes.columns else None)
-        next_base = (max_id if max_id is not None else -1)
-        fresh = assign_dense_ids(
-            matched, [order_col], id_col="_new_id", start=next_base + 1,
-        )
+        # targets that exact node.
+        src_registry = registry(nodes)
+        fresh = assign_ids_after(nodes, matched, [order_col],
+                                 id_col="_new_id")
         new_nodes = fresh.select(
             F.col("_new_id").alias("internal_id"),
             F.lit(dest_label).alias("label"),
@@ -509,22 +408,11 @@ def merge_edges(
                 nodes, dest_proj, key_col=key_col, label=dest_label,
                 order_col=order_col,
             )
-        # 3. resolve endpoints through the updated registry.
-        # Last-wins per key: under a reused identifier the reference's
-        # id dict points at the latest occurrence — without the dedup a
-        # duplicate key would fan each edge row into multiple edges.
-        w_reg = Window.partitionBy("ext_id").orderBy(
-            F.col("internal_id").desc())
-        registry = (
-            nodes.select(F.col(key_col).alias("ext_id"), "internal_id")
-            .withColumn("_rr", F.row_number().over(w_reg))
-            .filter(F.col("_rr") == 1)
-            .drop("_rr")
-        )
+        # 3. resolve endpoints through the updated registry
         resolved = resolve_endpoints(
             matched.select(F.col(src_col).alias("src_key"),
                            F.col(dst_col).alias("dst_key")),
-            registry,
+            registry(nodes),
             src_col="src_key",
             dst_col="dst_key",
             skip_invalid=dest_mode == "none",
@@ -605,11 +493,10 @@ def run_edge_update_query(
     rows: DataFrame,
     query: str,
     *,
-    variable_name: str = "row",
     rel_type: str,
     dest_label: str = "N",
     key_col: str = "key",
-    dest_mode: Optional[str] = None,
+    dest_mode: str = "merge",
     dedup_edges: bool = False,
 ):
     """Edge-creating update: ``query`` projects ``src_key``,
@@ -619,10 +506,8 @@ def run_edge_update_query(
     Mirrors the reference's relationship-creating bulk_update
     (test_bulk_update.py:83-121) with the documented projection
     restriction."""
-    view = "_rgbl_edge_rows"
-    rows.createOrReplaceTempView(view)
-    projected = spark.sql(f"SELECT {query}, row_idx FROM {view}")
-    cols = projected.limit(0).columns  # force analysis before any write
+    projected = _project_rows(spark, rows, query)
+    cols = projected.columns
     for need in ("src_key", "dst_key"):
         if need not in cols:
             raise ValueError(

@@ -108,10 +108,6 @@ class ColumnPlan:
     start_namespace: Optional[str] = None
     end_namespace: Optional[str] = None
 
-    @property
-    def property_columns(self) -> List[int]:
-        return [i for i, n in enumerate(self.column_names) if n is not None]
-
 
 def _parse_enforced(header: List[str], plan: ColumnPlan, id_type: str, source: str):
     plan.types = [HType.UNKNOWN] * plan.column_count

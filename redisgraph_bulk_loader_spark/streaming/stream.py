@@ -24,6 +24,8 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ids import latest_per_key
+
 
 def incremental_graph_update(
     existing_nodes: DataFrame,
@@ -44,12 +46,7 @@ def incremental_graph_update(
     if order_col is None and "row_idx" in updates.columns:
         order_col = "row_idx"
     if order_col:
-        w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
-        upd = (
-            updates.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select(*cols)
-        )
+        upd = latest_per_key(updates, key_cols, order_col).select(*cols)
     else:
         upd = updates.select(*cols).dropDuplicates(key_cols)
     kept = existing_nodes.join(upd.select(*key_cols), key_cols, "left_anti")

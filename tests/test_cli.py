@@ -123,6 +123,30 @@ class TestUpdateMachinery:
         got = {r.ext_id: r.val for r in merged.collect()}
         assert got == {"a": "last", "b": "bee", "z": "zed"}
 
+    def test_run_update_query_starts_no_job(self, spark, tmp_path):
+        """The update is one lazy MERGE: no Spark job runs until the
+        caller's action."""
+        from redisgraph_bulk_loader_spark.plans.updater import (
+            read_update_csv,
+            run_update_query,
+        )
+
+        p = tmp_path / "u.csv"
+        p.write_text("id,val\na,first\nb,bee\na,last\n")
+        existing = spark.createDataFrame(
+            [("a", "old"), ("z", "zed")], "ext_id string, val string"
+        )
+        rows = read_update_csv(spark, str(p))
+        sc = spark.sparkContext._jsc.sc()
+        j0 = int(sc.dagScheduler().nextJobId())
+        merged = run_update_query(
+            spark, existing, rows,
+            "row[0] AS ext_id, row[1] AS val", key_cols=["ext_id"],
+        )
+        assert int(sc.dagScheduler().nextJobId()) == j0
+        got = {r.ext_id: r.val for r in merged.collect()}
+        assert got == {"a": "last", "b": "bee", "z": "zed"}
+
     def test_run_update_query_invalid_fragment_fails_before_write(
         self, spark, tmp_path
     ):
@@ -153,8 +177,7 @@ class TestUpdateMachinery:
         rows = read_update_csv(spark, str(p), variable_name="r")
         merged = run_update_query(
             spark, existing, rows,
-            "r[0] AS ext_id, CAST(r[1] AS INT) AS v",
-            variable_name="r", key_cols=["ext_id"],
+            "r[0] AS ext_id, CAST(r[1] AS INT) AS v", key_cols=["ext_id"],
         )
         got = {r.ext_id: r.v for r in merged.collect()}
         assert got == {"x": 0, "k": 42}
@@ -283,11 +306,11 @@ class TestNodeMergeAndEdges:
         )
         _, created = merge_edges(
             self._nodes(spark), None, proj, rel_type="R",
-            create_dest=False, dedup_edges=False)
+            dest_mode="none", dedup_edges=False)
         assert created.count() == 2  # CREATE: one edge per row
         _, merged = merge_edges(
             self._nodes(spark), None, proj, rel_type="R",
-            create_dest=False, dedup_edges=True)
+            dest_mode="none", dedup_edges=True)
         assert merged.count() == 1  # MERGE: deduped
 
     def test_merge_edges_dedup_preserves_existing(self, spark):
@@ -313,7 +336,7 @@ class TestNodeMergeAndEdges:
         # node internal ids: key '0'->0, '5'->1, '3'->2
         _, out = merge_edges(
             self._nodes(spark), existing, proj, rel_type="R",
-            create_dest=False, dedup_edges=True)
+            dest_mode="none", dedup_edges=True)
         rows = sorted(
             (r.src_internal, r.dst_internal, r.rel_type, r.props_json)
             for r in out.collect()

@@ -19,11 +19,8 @@ from redisgraph_bulk_loader_spark.functions.text import (
     token_count,
 )
 from redisgraph_bulk_loader_spark.kernel import TAG_DOUBLE, TAG_LONG, infer_col
-from redisgraph_bulk_loader_spark.plans.updater import (
-    apply_updates,
-    quote_cell,
-    quote_col,
-)
+from redisgraph_bulk_loader_spark.plans.updater import quote_cell, quote_col
+from redisgraph_bulk_loader_spark.streaming import incremental_graph_update
 
 
 class TestShingles:
@@ -141,31 +138,13 @@ class TestUpdater:
         got = [r.q for r in df.select(quote_col(F.col("c")).alias("q")).collect()]
         assert got == [quote_cell(v) for v in vals]
 
-    def test_apply_updates_batched_equivalence(self, spark):
-        # test_bulk_update.py:306-343 multi-batch == single-batch
-        base = spark.createDataFrame(
-            [(str(i), f"v{i}") for i in range(50)], "ext_id string, name string"
-        )
-        upd = spark.createDataFrame(
-            [(str(i), f"new{i}") for i in range(30, 80)],
-            "ext_id string, name string",
-        )
-        single = apply_updates(base, upd, ["ext_id"], max_rows_per_batch=10**6)
-        multi = apply_updates(base, upd, ["ext_id"], max_rows_per_batch=7)
-        ms = {r.ext_id: r.name for r in single.collect()}
-        mm = {r.ext_id: r.name for r in multi.collect()}
-        assert ms == mm
-        assert len(ms) == 80
-        assert ms["40"] == "new40" and ms["10"] == "v10"
-
 
 class TestUpdater100k:
-    def test_100k_rows_multibatch_equals_single(self, spark):
+    def test_100k_rows_match_sequential_fold(self, spark):
         """The reference's largest tested load (100,000 rows in small
-        batches, test_bulk_update.py:306-343): multi-batch apply must
-        equal single-batch apply AND a sequential python fold (strict
-        file-order last-wins), with bounded lineage (checkpoint_every).
-        """
+        batches, test_bulk_update.py:306-343): one MERGE must equal a
+        sequential python fold (strict file-order last-wins), which is
+        what applying the reference's batches in order gives."""
         from pyspark.sql import functions as F
 
         base = spark.range(0, 50_000).select(
@@ -177,14 +156,9 @@ class TestUpdater100k:
             F.concat(F.lit("v"), F.col("id")).alias("v"),
             F.col("id").alias("row_idx"),
         )
-        single = apply_updates(base, upd, ["ext_id"],
-                               max_rows_per_batch=10**9)
-        multi = apply_updates(base, upd, ["ext_id"],
-                              max_rows_per_batch=10_000,
-                              checkpoint_every=4)
-        s = {r.ext_id: r.v for r in single.collect()}
-        m = {r.ext_id: r.v for r in multi.collect()}
-        assert s == m
+        merged = incremental_graph_update(base, upd, ["ext_id"],
+                                          order_col="row_idx")
+        m = {r.ext_id: r.v for r in merged.collect()}
         # python fold oracle: strict row order, last occurrence wins
         expect = {k: "init" for k in range(50_000)}
         for i in range(n):

@@ -151,7 +151,9 @@ class TestLoaderSemantics:
         # test_bulk_loader.py:250-292
         p = _w(tmp_path, "dup.csv", "_identifier,nodename\n0,a\n5,b\n0,c\n")
         r = _w(tmp_path, "rel2.csv", "src,dest\n0,5\n")
-        with pytest.raises(SchemaError):
+        with pytest.raises(
+                SchemaError,
+                match="Node identifier '0' was used multiple times"):
             bulk_insert(spark, [(p, None)], [(r, None)])
 
     def test_reused_identifier_ok_nodes_only(self, spark, tmp_path):
@@ -370,8 +372,8 @@ class TestUpdaterRuntimeError:
         p.write_text("id,val\na,notanumber\n")
         existing = spark.createDataFrame([("z", 1)], "ext_id string, v int")
         rows = read_update_csv(spark, str(p))
-        # ANSI mode (Spark 4 default) fails the cast during the batched
-        # apply's eager materialization — inside run_update_query
+        # ANSI mode (Spark 4 default) fails the cast when the merged
+        # frame is computed
         with _pytest.raises(Exception, match="(?i)cast|number|ansi"):
             run_update_query(
                 spark, existing, rows,

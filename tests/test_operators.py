@@ -467,6 +467,19 @@ class TestIncrementalUpdate:
         m = {r.ext_id: r.name for r in twice.collect()}
         assert m == {"0": "a", "5": "B2", "3": "c"}
         assert once.count() == twice.count() == 3
+        # overlapping ranges: updated keys take the new value, untouched
+        # keys keep theirs, unmatched keys are inserted
+        base = spark.createDataFrame(
+            [(str(i), f"v{i}") for i in range(50)], "ext_id string, name string"
+        )
+        upd = spark.createDataFrame(
+            [(str(i), f"new{i}") for i in range(30, 80)],
+            "ext_id string, name string",
+        )
+        m = {r.ext_id: r.name
+             for r in incremental_graph_update(base, upd, ["ext_id"]).collect()}
+        assert len(m) == 80
+        assert m["40"] == "new40" and m["10"] == "v10"
 
 
 class TestCatalogResume:
@@ -1179,7 +1192,7 @@ class TestReviewRegressions:
             [("0", "5", 0)], "src_key string, dst_key string, row_idx long"
         )
         _, edges = merge_edges(nodes, None, proj, rel_type="R",
-                               create_dest=False)
+                               dest_mode="none")
         got = [(r.src_internal, r.dst_internal) for r in edges.collect()]
         assert got == [(2, 1)]  # latest '0' row, exactly one edge
 

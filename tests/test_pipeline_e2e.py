@@ -261,7 +261,7 @@ class TestJobBudget:
     #: Spark jobs one catalog build_graph starts over this corpus (every
     #: size gate on its small side); kg builds repeat their job count
     #: exactly, so any added job fails here
-    BUILD_JOBS = 40
+    BUILD_JOBS = 38
 
     def test_build_and_resume_job_counts(self, spark, tmp_path):
         from redisgraph_bulk_loader_spark.cache import release_pins
