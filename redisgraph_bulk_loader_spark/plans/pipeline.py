@@ -330,31 +330,36 @@ def build_graph(
         if catalog is not None:
             if not catalog.is_complete("build_graph", fp):
                 # The four table writes are independent jobs over
-                # already-pinned inputs: submit them concurrently so
-                # each job's task tail is back-filled by the next
-                # job's tasks (guide §2.6 overlap; FIFO scheduling
+                # already-pinned inputs: two chains run concurrently so
+                # each job's task tail is back-filled by the other
+                # chain's tasks (guide §2.6 overlap; FIFO scheduling
                 # gives exactly the back-fill behavior). The manifest
                 # commit is lock-serialized inside GraphCatalog.write.
-                # pred_counts stays LAST and sequential: its
+                # edges and triples share the distinct_triples pin, which
+                # nothing materializes before the writes: in one chain
+                # the edges write fills it before the triples write
+                # scans it (run concurrently, the triples write can start
+                # before the pin is filled and redo the dedup shuffle as
+                # one more job). pred_counts stays LAST and sequential: its
                 # stage="build_graph" lineage row is the full-resume
                 # completion marker, so it must not commit before the
                 # other tables have landed.
                 from concurrent.futures import ThreadPoolExecutor
 
-                _writes = [
-                    ("nodes", nodes, ["label"]),
-                    ("edges", edges, ["rel_type"]),
-                    ("triples", distinct_triples, None),
-                    ("node_registry", registry, None),
+                _chains = [
+                    [("edges", edges, ["rel_type"]),
+                     ("triples", distinct_triples, None)],
+                    [("nodes", nodes, ["label"]),
+                     ("node_registry", registry, None)],
                 ]
 
-                def _w(spec):
-                    tbl, frame, part = spec
-                    catalog.write(tbl, frame, partition_by=part,
-                                  stage=tbl, input_fingerprint=fp)
+                def _w(chain):
+                    for tbl, frame, part in chain:
+                        catalog.write(tbl, frame, partition_by=part,
+                                      stage=tbl, input_fingerprint=fp)
 
                 with ThreadPoolExecutor(max_workers=2) as pool:
-                    list(pool.map(_w, _writes))
+                    list(pool.map(_w, _chains))
                 catalog.write("pred_counts", pred_counts,
                               stage="build_graph", input_fingerprint=fp)
             for key, table in _TABLES.items():
