@@ -158,8 +158,18 @@ def assign_ids_after(existing: DataFrame, df: DataFrame,
                      id_col: str = "internal_id") -> DataFrame:
     """Number ``df``'s rows densely in ``order_cols`` order, after the
     largest ``internal_id`` of ``existing`` (from 0 when it has none):
-    the ids an update gives the nodes it creates."""
-    max_id = (existing.agg(F.max("internal_id")).first()[0]
-              if "internal_id" in existing.columns else None)
-    start = 0 if max_id is None else max_id + 1
-    return assign_dense_ids(df, order_cols, id_col=id_col, start=start)
+    the ids an update gives the nodes it creates. Lazy — the start id
+    is a one-row aggregate cross-joined in and the rows are numbered by
+    one global window, so no job runs before the caller's action;
+    update sets are dim-scale (``plans.updater.upsert_nodes``)."""
+    numbered = df.withColumn(
+        id_col, F.row_number().over(Window.orderBy(*order_cols)) - 1)
+    if "internal_id" not in existing.columns:
+        return numbered.withColumn(id_col, F.col(id_col).cast("long"))
+    start = existing.agg(
+        F.coalesce(F.max("internal_id") + 1, F.lit(0)).alias("_start"))
+    return (
+        numbered.crossJoin(F.broadcast(start))
+        .withColumn(id_col, (F.col(id_col) + F.col("_start")).cast("long"))
+        .drop("_start")
+    )

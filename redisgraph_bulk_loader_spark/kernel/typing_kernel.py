@@ -30,10 +30,8 @@ must be bracket-delimited and literal_eval-parse. Violations raise
 ``SchemaError``.
 
 Everything here is pure Python/pandas — no Spark imports — so it is
-unit-testable standalone and embeddable in an Arrow-batched pandas UDF
-(vectorization happens at the Spark boundary; inside a batch we map a
-compiled closure over the column, which is the sanctioned pattern for
-semantics Python-exact kernels; see spark_udfs.py).
+unit-testable standalone; the loader's ``_parse_rows`` calls it per cell
+inside its Arrow-batched ``mapInPandas`` (plans/loader.py).
 """
 
 from __future__ import annotations

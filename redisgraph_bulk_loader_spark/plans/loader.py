@@ -5,13 +5,22 @@ lifecycle (studied at /root/reference/redisgraph_bulk_loader/
 bulk_insert.py:143-232): schema pass -> node pass (typing, ID dict,
 dense ids) -> edge pass (endpoint resolution) -> sink.
 
+Reading: ``_record_source`` is the package's one CSV reader — the
+loader and the updater (``updater.read_update_csv``) both take its
+``(row_idx, cells)`` records — and ``_csv_records`` is its one parse:
+the reference's python-csv reader dialect (entity_file.py:192-202,
+bulk_update.py:82-104), spelled once. The header is that parse's first
+record over the file's head, read through Hadoop FS like the records,
+so a quoted header loses its quotes exactly as python csv's does
+and scheme-qualified paths (file://, hdfs://) load.
+
 Ordering semantics: the reference assigns internal node ids in
 file-CLI-order then row-order (query_buffer.py:12-23). Row order inside
 a CSV is recovered here with a per-file zipWithIndex over the raw lines
 (the one RDD use in this package — a genuine need: row position IS the
-reference's ordering key), then fields are parsed batch-wise with the
-exact python-csv dialect the reference uses. Loader-compat inputs are
-dimension-scale; the 10^12-row path is the documents pipeline.
+reference's ordering key), or with the record index of the quoted
+dialects' parse. Loader-compat inputs are dimension-scale; the
+10^12-row path is the documents pipeline.
 
 Typing: every cell goes through the kernel (schemaless inference or
 enforced cast); NULL cells become *absent* map keys
@@ -22,12 +31,13 @@ from __future__ import annotations
 
 import csv as _csv
 import io
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import Callable, Iterable, Iterator, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     LongType,
     StringType,
     StructField,
@@ -39,7 +49,6 @@ from ..exceptions import CSVError
 from ..ids import assign_dense_ids, detect_duplicates
 from ..kernel.typing_kernel import TAG_NULL, canonical_literal, cast_cell, infer_cell
 from ..schema import ColumnPlan, HType, parse_header
-from ..sources.csv_source import _read_header
 
 _TYPE_TAG = {
     HType.BOOL: 1, HType.DOUBLE: 2, HType.STRING: 3, HType.LONG: 4,
@@ -47,11 +56,48 @@ _TYPE_TAG = {
 }
 
 
+#: (row_idx, cells): one csv record per row, numbered from 0 with the
+#: header as record 0 — the shape every reader below returns
+_CELLS_SCHEMA = StructType([
+    StructField("row_idx", LongType()),
+    StructField("cells", ArrayType(StringType())),
+])
+
+
+def _csv_records(text: str, cfg: Config) -> Iterator[List[str]]:
+    """The reference dialect (entity_file.py:192-202, bulk_update.py:
+    82-104) over ``text``: ``cfg``'s delimiter, quoting and escape
+    char, leading spaces skipped. The package's one csv reader — the
+    header and every record path parse through it."""
+    reader = _csv.reader(
+        io.StringIO(text), delimiter=cfg.separator, skipinitialspace=True,
+        quoting=cfg.quoting, escapechar=cfg.escapechar,
+    )
+    return ([str(c) for c in row] for row in reader)
+
+
+def _parse_cells(
+    df: DataFrame, records: Callable[[pd.DataFrame], Iterable]
+) -> DataFrame:
+    """(row_idx, cells) from ``records(batch)``, which yields the
+    ``(row_idx, cells)`` pairs of one Arrow batch of ``df``."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            idx, rows = [], []
+            for i, row in records(pdf):
+                idx.append(int(i))
+                rows.append(row)
+            yield pd.DataFrame({"row_idx": idx, "cells": rows})
+
+    return df.mapInPandas(run, schema=_CELLS_SCHEMA)
+
+
 def _lines_with_index(
     spark: SparkSession, path: str, skip_header: bool = True
 ) -> DataFrame:
     """(line, row_idx) preserving file order; header dropped unless
-    ``skip_header=False`` (the updater's --no-header mode)."""
+    ``skip_header=False``."""
     rdd = spark.sparkContext.textFile(path).zipWithIndex()
     df = spark.createDataFrame(
         rdd, StructType([StructField("line", StringType()),
@@ -66,37 +112,22 @@ def _logical_cells(
     """(row_idx, cells) via a whole-file csv parse — the only correct
     reading when quoting is enabled: a quoted field may contain an
     embedded newline (the reference iterates the file object with
-    csv.reader, entity_file.py:192-202, which handles them), so
+    a python csv reader, entity_file.py:192-202, which handles them), so
     physical lines are not records. Loader-compat inputs are dim-scale
     (the reference's largest tested load is 100k rows); the single-task
     parse is bounded by that, while the 10^12-row path (documents
     pipeline, and the QUOTE_NONE default dialect where lines ARE
     records) stays distributed."""
-    from pyspark.sql.types import ArrayType
-
-    sep, quoting, esc = cfg.separator, cfg.quoting, cfg.escapechar
-    whole = spark.read.text(path, wholetext=True)
-    schema = StructType([
-        StructField("row_idx", LongType()),
-        StructField("cells", ArrayType(StringType())),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            idx, rows = [], []
-            for text in pdf["value"]:
-                reader = _csv.reader(
-                    io.StringIO(text), delimiter=sep,
-                    skipinitialspace=True, quoting=quoting, escapechar=esc,
-                )
-                for i, row in enumerate(reader):
-                    if skip_header and i == 0:
-                        continue
-                    idx.append(i)
-                    rows.append([str(c) for c in row])
-            yield pd.DataFrame({"row_idx": idx, "cells": rows})
-
-    return whole.mapInPandas(run, schema=schema)
+    first = 1 if skip_header else 0
+    return _parse_cells(
+        spark.read.text(path, wholetext=True),
+        lambda pdf: (
+            (i, row)
+            for text in pdf["value"]
+            for i, row in enumerate(_csv_records(text, cfg))
+            if i >= first
+        ),
+    )
 
 
 #: above this input size the single-task whole-file parse (the only
@@ -157,45 +188,64 @@ def _scan_quote_state(line, in_q, sep, esc):
     return in_q, dangling
 
 
+def _read_head(
+    spark: SparkSession, path: str
+) -> Optional[Tuple[bytes, int]]:
+    """``(first 64 KiB, byte size)`` of ``path`` — of its first
+    listed file for a directory — or None when the path does not
+    exist.
+
+    Reads through the Hadoop FileSystem API (the handle the record
+    readers and ``_input_size_bytes`` use) so the header and the line
+    terminator come from the same bytes as the records for every scheme
+    Spark reads — file://, hdfs://, s3a://; a local open() fails on the
+    URI forms."""
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return None
+    if fs.getFileStatus(p).isDirectory():
+        for st in fs.listStatus(p):
+            if st.isFile():
+                p = st.getPath()
+                break
+    size = int(fs.getFileStatus(p).getLen())
+    stream = fs.open(p)
+    try:
+        # commons-io (on Spark's classpath) reads exactly n bytes and
+        # returns byte[] -> python bytes in ONE py4j roundtrip; a
+        # per-byte stream.read() loop would be 64k roundtrips.
+        head = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(
+            stream, min(size, 1 << 16)))
+    finally:
+        stream.close()
+    return head, size
+
+
+def _read_header(spark: SparkSession, path: str, cfg: Config) -> List[str]:
+    """The file's first csv record under ``cfg``'s dialect — the row
+    the reference's reader yields first (entity_file.py:192-202). A
+    header of 64 KiB or more, terminator included, raises CSVError."""
+    read = _read_head(spark, path)
+    if read is None:
+        raise FileNotFoundError(f"{path} does not exist")
+    head, size = read
+    records = _csv_records(head.decode("utf-8", errors="replace"), cfg)
+    header = next(records, [])
+    if next(records, None) is None and len(head) < size:
+        raise CSVError(f"{path}: header record is 64 KiB or longer")
+    return header
+
+
 def _sniff_newline(spark: SparkSession, path: str) -> str:
     """Line terminator of the file ("\r\n" or "\n") from its head —
     Hadoop's line reader strips BOTH, so record reassembly must rejoin
     embedded (in-quote) line breaks with the original terminator or
-    multi-line cell bytes differ from the whole-file parse.
-
-    Reads the head through the Hadoop FileSystem API (the same handle
-    ``_input_size_bytes`` uses) so sniffing works for EVERY scheme the
-    32 MB gate can route here — hdfs://, s3a://, ... are exactly where
-    the distributed path matters (ADVICE r4); a local open() fallback
-    would silently mis-terminate CRLF cells on remote storage. A
-    directory path sniffs its first contained file."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    multi-line cell bytes differ from the whole-file parse. A missing
+    path gives "\n", the placeholder for a plan whose read fails."""
     try:
-        status = fs.getFileStatus(p)
-    except Exception:
-        # missing path: the read that follows will fail loudly anyway;
-        # '\n' is just the placeholder for that doomed plan
-        return "\n"
-    try:
-        if status.isDirectory():
-            for st in fs.listStatus(p):
-                if st.isFile():
-                    p = st.getPath()
-                    break
-        n = min(int(fs.getFileStatus(p).getLen()), 1 << 16)
-        stream = fs.open(p)
-        try:
-            # commons-io (on Spark's classpath) reads exactly n bytes
-            # and returns byte[] -> python bytes in ONE py4j roundtrip;
-            # a per-byte stream.read() loop would be 64k roundtrips.
-            head = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream, n)
-            )
-        finally:
-            stream.close()
-        return "\r\n" if b"\r\n" in head else "\n"
+        read = _read_head(spark, path)
     except Exception as e:  # pragma: no cover - env-specific failures
         # An EXISTING file we cannot sniff (transient remote-FS error,
         # stripped commons-io, ...) must not silently corrupt CRLF
@@ -209,6 +259,7 @@ def _sniff_newline(spark: SparkSession, path: str) -> str:
             RuntimeWarning,
         )
         return "\n"
+    return "\r\n" if read is not None and b"\r\n" in read[0] else "\n"
 
 
 def _distributed_logical_cells(
@@ -242,9 +293,9 @@ def _distributed_logical_cells(
     even though python csv would consider it mid-field; no real dialect
     hits this (escaped newlines in quoted dialects are not exercised by
     the reference either)."""
-    from pyspark.sql.types import ArrayType, BooleanType, IntegerType
+    from pyspark.sql.types import BooleanType, IntegerType
 
-    sep, quoting, esc = cfg.separator, cfg.quoting, cfg.escapechar
+    sep, esc = cfg.separator, cfg.escapechar
     newline = _sniff_newline(spark, path)
 
     from ..cache import pin
@@ -356,56 +407,43 @@ def _distributed_logical_cells(
     )
     if skip_header:
         records = records.filter(F.col("_rec") > 0)
-
-    schema = StructType([
-        StructField("row_idx", LongType()),
-        StructField("cells", ArrayType(StringType())),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            idx, rows = [], []
-            for rec, text in zip(pdf["_rec"], pdf["_text"]):
-                reader = _csv.reader(
-                    io.StringIO(text), delimiter=sep,
-                    skipinitialspace=True, quoting=quoting,
-                    escapechar=esc,
-                )
-                parsed = list(reader)
-                idx.append(int(rec))
-                rows.append([str(c) for c in parsed[0]] if parsed else [])
-            yield pd.DataFrame({"row_idx": idx, "cells": rows})
-
-    return records.mapInPandas(run, schema=schema)
+    return _parse_cells(
+        records,
+        lambda pdf: (
+            (rec, next(_csv_records(text, cfg), []))
+            for rec, text in zip(pdf["_rec"], pdf["_text"])
+        ),
+    )
 
 
 def _record_source(
-    spark: SparkSession, path: str, cfg: Config,
-    whole_file_max_bytes: Optional[int] = None,
+    spark: SparkSession, path: str, cfg: Config, *, skip_header: bool = True
 ) -> DataFrame:
-    """Pick the record reader for the configured dialect: distributed
-    physical-line split under QUOTE_NONE (the reference default, where
-    a newline always ends a record); for quoted dialects, the
-    whole-file logical csv parse below ``whole_file_max_bytes`` (one
-    task, exact reference dialect) and the distributed quote-state
-    record assembly above it (quoted fields may span lines, but a
-    large file must not funnel through a single task — ADVICE r3)."""
+    """(row_idx, cells) for every record of ``path`` under ``cfg``'s
+    dialect, the header (record 0) dropped unless ``skip_header=False``.
+    QUOTE_NONE (the reference default, where a newline always ends a
+    record) splits physical lines distributed and parses each batch's
+    lines; quoted dialects parse the whole file in one task up to
+    ``WHOLE_FILE_MAX_BYTES`` and assemble quote-state records
+    distributed above it (quoted fields may span lines, but a large
+    file must not funnel through a single task)."""
     if cfg.quoting == _csv.QUOTE_NONE:
-        return _lines_with_index(spark, path)
-    cap = (WHOLE_FILE_MAX_BYTES if whole_file_max_bytes is None
-           else whole_file_max_bytes)
-    if _input_size_bytes(spark, path) > cap:
-        return _distributed_logical_cells(spark, path, cfg)
-    return _logical_cells(spark, path, cfg)
+        return _parse_cells(
+            _lines_with_index(spark, path, skip_header),
+            lambda pdf: zip(pdf["row_idx"], _csv_records(
+                "\n".join(pdf["line"].astype(str)), cfg)),
+        )
+    if _input_size_bytes(spark, path) > WHOLE_FILE_MAX_BYTES:
+        return _distributed_logical_cells(spark, path, cfg, skip_header)
+    return _logical_cells(spark, path, cfg, skip_header)
 
 
 def _parse_rows(
-    lines: DataFrame, plan: ColumnPlan, cfg: Config, path: str
+    cells: DataFrame, plan: ColumnPlan, cfg: Config, path: str
 ) -> DataFrame:
-    """Parse raw lines with the reference csv dialect; validate arity;
-    type every property cell through the kernel. Input is either
-    (line, row_idx) physical lines or (row_idx, cells) pre-split
-    logical records from _logical_cells. Output columns:
+    """Validate each record's arity and type every property cell
+    through the kernel. Input is ``_record_source``'s (row_idx, cells).
+    Output columns:
     row_idx, _key fields, props (map<string, canonical literal string>),
     plus typed id/endpoint columns."""
     n_cols = plan.column_count
@@ -415,7 +453,6 @@ def _parse_rows(
         if plan.column_names[i] is not None
     ]
     enforce = cfg.enforce_schema
-    sep, quoting, esc = cfg.separator, cfg.quoting, cfg.escapechar
     kind, id_off = plan.kind, plan.id
     s_off, e_off = plan.start_id, plan.end_id
 
@@ -435,16 +472,7 @@ def _parse_rows(
 
         for pdf in batches:
             out = {f.name: [] for f in schema.fields}
-            if "cells" in pdf.columns:
-                row_iter = zip(pdf["row_idx"], pdf["cells"])
-            else:
-                reader = _csv.reader(
-                    io.StringIO("\n".join(pdf["line"].astype(str))),
-                    delimiter=sep, skipinitialspace=True, quoting=quoting,
-                    escapechar=esc,
-                )
-                row_iter = zip(pdf["row_idx"], reader)
-            for row_idx, row in row_iter:
+            for row_idx, row in zip(pdf["row_idx"], pdf["cells"]):
                 if len(row) != n_cols:
                     raise CSVError(
                         f"{path}:{int(row_idx)} Expected {n_cols} columns, "
@@ -471,7 +499,7 @@ def _parse_rows(
                     out["dst_id"].append(row[e_off])
             yield pd.DataFrame(out)
 
-    return lines.mapInPandas(run, schema=schema)
+    return cells.mapInPandas(run, schema=schema)
 
 
 def _ns_prefixed(col, namespace: Optional[str]):
@@ -513,7 +541,7 @@ def bulk_insert(
     node_frames = []
     plans: List[ColumnPlan] = []
     for file_idx, (path, label) in enumerate(node_files):
-        header = _read_header(path, cfg.separator, cfg.escapechar)
+        header = _read_header(spark, path, cfg)
         entity = label or path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
         plan = parse_header(
             header, "node", entity,
@@ -554,7 +582,7 @@ def bulk_insert(
     skipped = 0
     edge_frames = []
     for path, rtype in relation_files:
-        header = _read_header(path, cfg.separator, cfg.escapechar)
+        header = _read_header(spark, path, cfg)
         entity = rtype or path.rsplit("/", 1)[-1].rsplit(".", 1)[0]
         plan = parse_header(
             header, "relation", entity,

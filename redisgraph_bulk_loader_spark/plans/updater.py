@@ -9,6 +9,10 @@ incremental commit semantics (partial failure leaves prior batches
 applied, README.md:205).
 
 Spark mapping:
+- ``read_update_csv``: the loader's one record reader
+  (``loader._record_source``) under ``Config``'s default dialect, which
+  is the updater's (bulk_update.py:82-104), with ``cells`` renamed to
+  the row variable.
 - ``quote_cell``: the documented *intent* of quote_string — numerics,
   booleans, and bracketed arrays pass through; everything else (not
   already quoted) is double-quoted. (The reference contains a real bug
@@ -30,8 +34,10 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import Config
 from ..ids import assign_ids_after, latest_per_key
 from ..streaming.stream import incremental_graph_update
+from .loader import _record_source
 
 
 def _is_numeric(v: str) -> bool:
@@ -101,41 +107,13 @@ def read_update_csv(
 ) -> DataFrame:
     """Read an update CSV the way the reference does
     (bulk_update.py:82-104: QUOTE_NONE, backslash escape,
-    skipinitialspace, optional header skip) into
-    ``(row_idx, <variable_name>: array<string>)`` — positional cells,
-    so SQL fragments use 0-based ``<var>[i]`` exactly like the
-    reference's Cypher ``row[i]``."""
-    import csv as _csv
-    import io
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, LongType, StringType, StructField, StructType,
-    )
-
-    from .loader import _lines_with_index
-
-    rdd_df = _lines_with_index(spark, path, skip_header=not no_header)
-    schema = StructType([
-        StructField("row_idx", LongType()),
-        StructField(variable_name, ArrayType(StringType())),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            idx, rows = [], []
-            reader = _csv.reader(
-                io.StringIO("\n".join(pdf["line"].astype(str))),
-                delimiter=separator, skipinitialspace=True,
-                quoting=_csv.QUOTE_NONE, escapechar="\\",
-            )
-            for row_idx, row in zip(pdf["row_idx"], reader):
-                idx.append(int(row_idx))
-                rows.append(list(row))
-            yield pd.DataFrame({"row_idx": idx, variable_name: rows})
-
-    return rdd_df.mapInPandas(run, schema=schema)
+    skipinitialspace — ``Config``'s default dialect — and an optional
+    header skip) into ``(row_idx, <variable_name>: array<string>)`` —
+    positional cells, so SQL fragments use 0-based ``<var>[i]`` exactly
+    like the reference's Cypher ``row[i]``."""
+    return _record_source(
+        spark, path, Config(separator=separator), skip_header=not no_header,
+    ).withColumnRenamed("cells", variable_name)
 
 
 def _props_map(prop_cols: List[str]):
@@ -185,8 +163,8 @@ def upsert_nodes(
     the loader's json.dumps, so byte-level fingerprints of touched
     rows change even on a value-level no-op update.
     Update CSVs are dim-scale in the reference (<= the 100k-row
-    largest tested load); the driver-side max(internal_id) lookup and
-    the fresh-id numbering are bounded by that, not by fact tables.
+    largest tested load); the fresh ids (``ids.assign_ids_after``, one
+    global window) are bounded by that, not by fact tables.
     """
     prop_cols = [c for c in projected.columns
                  if c not in (key_col, order_col)]

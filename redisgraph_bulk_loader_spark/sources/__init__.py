@@ -5,4 +5,3 @@ from .documents import (  # noqa: F401
     synthesize_documents,
     synthesize_gold_triples,
 )
-from .csv_source import read_entity_csv  # noqa: F401

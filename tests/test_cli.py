@@ -147,6 +147,47 @@ class TestUpdateMachinery:
         got = {r.ext_id: r.val for r in merged.collect()}
         assert got == {"a": "last", "b": "bee", "z": "zed"}
 
+    @pytest.mark.parametrize("dest_mode", [None, "create"],
+                             ids=["node_merge", "edge_create"])
+    def test_merge_query_starts_no_job(self, spark, tmp_path, dest_mode):
+        """The nodes an update creates are numbered lazily (a one-row
+        start id and one window): neither a node MERGE nor a
+        create-mode edge update runs a Spark job until the caller's
+        action."""
+        from redisgraph_bulk_loader_spark.plans.updater import (
+            read_update_csv,
+            run_edge_update_query,
+            run_node_merge_query,
+        )
+
+        p = tmp_path / "u.csv"
+        p.write_text("id,val\na,first\nb,bee\na,last\n")
+        nodes = spark.createDataFrame(
+            [(0, "L", "a", "{}"), (1, "L", "z", "{}")],
+            "internal_id long, label string, key string, props_json string",
+        )
+        rows = read_update_csv(spark, str(p))
+        sc = spark.sparkContext._jsc.sc()
+        j0 = int(sc.dagScheduler().nextJobId())
+        if dest_mode is None:
+            out = run_node_merge_query(
+                spark, nodes, rows, "row[0] AS key, row[1] AS val")
+        else:
+            out, edges = run_edge_update_query(
+                spark, nodes, None, rows,
+                "row[0] AS src_key, row[1] AS dst_key",
+                rel_type="R", dest_mode="create",
+            )
+        assert int(sc.dagScheduler().nextJobId()) == j0
+        ids = {r.key: r.internal_id for r in out.collect()}
+        if dest_mode is None:
+            assert ids == {"a": 0, "z": 1, "b": 2}
+        else:
+            # src 'b' matches no node; rows 1 and 3 create, in row order
+            assert ids == {"a": 0, "z": 1, "first": 2, "last": 3}
+            assert sorted((r.src_internal, r.dst_internal)
+                          for r in edges.collect()) == [(0, 2), (0, 3)]
+
     def test_run_update_query_invalid_fragment_fails_before_write(
         self, spark, tmp_path
     ):

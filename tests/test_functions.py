@@ -1,5 +1,5 @@
-"""Function-level tests: hash sketches, text analysis, updater quoting,
-kernel pandas UDFs through a live Spark plan.
+"""Function-level tests: hash sketches, text analysis, updater quoting
+through a live Spark plan.
 """
 
 import pytest
@@ -18,7 +18,6 @@ from redisgraph_bulk_loader_spark.functions.text import (
     quality_score,
     token_count,
 )
-from redisgraph_bulk_loader_spark.kernel import TAG_DOUBLE, TAG_LONG, infer_col
 from redisgraph_bulk_loader_spark.plans.updater import quote_cell, quote_col
 from redisgraph_bulk_loader_spark.streaming import incremental_graph_update
 
@@ -107,18 +106,6 @@ class TestTextFunctions:
         got = [r.q for r in df.select(quality_score(F.col("t")).alias("q")).collect()]
         assert got[0] > got[1]
         assert 0.0 <= got[1] <= got[0] <= 1.0
-
-
-class TestKernelUdfs:
-    def test_infer_col_plan(self, spark):
-        df = spark.createDataFrame(
-            [("5",), ("0.2",), ("x",), ("",)], "c string"
-        )
-        out = df.select(infer_col(F.col("c")).alias("v")).collect()
-        tags = [r.v.t for r in out]
-        assert tags == [TAG_LONG, TAG_DOUBLE, 3, 0]
-        assert out[0].v.l == 5
-        assert out[1].v.d == 0.2
 
 
 class TestUpdater:

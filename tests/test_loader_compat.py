@@ -302,10 +302,53 @@ class TestLoaderSemantics:
         # example2/Robots.csv: quotes kept, quoted numeric is a string
         p = _w(tmp_path, "Robots.csv", '"name"\n"Beebop"\n"30165"\n')
         g = bulk_insert(spark, [(p, None)])
-        vals = sorted(
-            json.loads(r.props_json)['"name"'] for r in g.nodes.collect()
-        )
+        props = [json.loads(r.props_json) for r in g.nodes.collect()]
+        # the QUOTE_NONE header keeps its quotes too
+        assert {k for d in props for k in d} == {'"name"'}
+        vals = sorted(d['"name"'] for d in props)
         assert vals == ['"\\"30165\\""', '"\\"Beebop\\""']
+
+    def test_quoted_header_matches_csv_reader(self, spark, tmp_path):
+        """Under a quoted dialect the header is csv.reader's first row
+        of the file: its quotes go, like the records' (the reference
+        reads both with one reader, entity_file.py:192-202)."""
+        import csv as _csv
+        import io as _io
+
+        content = '"id", "full name",age\n"1","Alice A",30\n2,"Bob",31\n'
+        p = _w(tmp_path, "q.csv", content)
+        header = next(_csv.reader(
+            _io.StringIO(content), delimiter=",", skipinitialspace=True,
+            quoting=_csv.QUOTE_MINIMAL, escapechar="\\",
+        ))
+        g = bulk_insert(spark, [(p, None)],
+                        config=Config(quoting=_csv.QUOTE_MINIMAL))
+        rows = g.nodes.collect()
+        assert header == ["id", "full name", "age"]
+        assert {k for r in rows for k in json.loads(r.props_json)} == \
+            set(header)
+        assert sorted(r.key for r in rows) == ["1", "2"]
+
+    def test_file_uri_inputs_load(self, spark, tmp_path):
+        """Node and relation files given as file:// URIs load: the
+        header is read through Hadoop FS like the records."""
+        person = _w(tmp_path, "Person.csv", "name,age\nAlice,32\nBob,31\n")
+        knows = _w(tmp_path, "KNOWS.csv", "src,dest\nAlice,Bob\n")
+        g = bulk_insert(spark, [("file://" + person, None)],
+                        [("file://" + knows, None)])
+        nodes = {r.key: r for r in g.nodes.collect()}
+        assert sorted(nodes) == ["Alice", "Bob"]
+        assert nodes["Alice"].label == "Person"
+        assert [(r.src_internal, r.dst_internal, r.rel_type)
+                for r in g.edges.collect()] == [
+            (nodes["Alice"].internal_id, nodes["Bob"].internal_id, "KNOWS")]
+
+    def test_header_of_64_kib_raises(self, spark, tmp_path):
+        """The header is parsed from the file's first 64 KiB; a header
+        record that long or longer fails instead of loading cut."""
+        p = _w(tmp_path, "wide.csv", "a" * (1 << 16) + "\n1\n")
+        with pytest.raises(CSVError, match="64 KiB"):
+            bulk_insert(spark, [(p, None)])
 
 
 class TestConfigParity:

@@ -1,4 +1,4 @@
-"""Operator-level tests: CSV source, endpoint resolution, dedup family,
+"""Operator-level tests: endpoint resolution, dedup family,
 similarity, connected components, skew ops, streaming merge, catalog
 resume. Reference semantics citations inline.
 """
@@ -23,57 +23,7 @@ from redisgraph_bulk_loader_spark.operators.similarity import (
     lsh_bucketed_topk,
 )
 from redisgraph_bulk_loader_spark.operators.skew import salted_join, two_phase_count
-from redisgraph_bulk_loader_spark.sources import read_entity_csv
 from redisgraph_bulk_loader_spark.streaming import incremental_graph_update
-
-
-# ---------------------------------------------------------------------------
-# CSV source (reference dialect)
-# ---------------------------------------------------------------------------
-
-class TestCsvSource:
-    def _write(self, tmp_path, name, content):
-        p = os.path.join(str(tmp_path), name)
-        with open(p, "w") as f:
-            f.write(content)
-        return p
-
-    def test_schemaless_node_read(self, spark, tmp_path):
-        p = self._write(
-            tmp_path, "Person.csv", "name,age\nAlice,32\nBob,31\n"
-        )
-        res = read_entity_csv(spark, p, "node")
-        assert res.plan.entity_str == "Person"
-        assert res.plan.column_names == ["name", "age"]
-        rows = sorted(tuple(r) for r in res.df.collect())
-        assert rows == [("Alice", "32"), ("Bob", "31")]
-
-    def test_quotes_stay_literal(self, spark, tmp_path):
-        # QUOTE_NONE: "30165" keeps its quotes (example2/Robots.csv,
-        # README.md:94)
-        p = self._write(tmp_path, "Robots.csv", '"name"\n"Beebop"\n"30165"\n')
-        res = read_entity_csv(spark, p, "node")
-        assert res.plan.entity_str == "Robots"
-        assert res.plan.column_names == ['"name"']
-        vals = sorted(r[0] for r in res.df.collect())
-        assert vals == ['"30165"', '"Beebop"']
-
-    def test_arity_violation_strict(self, spark, tmp_path):
-        # entity_file.py:220-233: row arity must match header
-        p = self._write(tmp_path, "bad.csv", "a,b\n1,2\n1,2,3\n")
-        with pytest.raises(CSVError):
-            read_entity_csv(spark, p, "node", strict_arity=True)
-
-    def test_arity_violation_skip(self, spark, tmp_path):
-        p = self._write(tmp_path, "bad.csv", "a,b\n1,2\n1,2,3\n4,5\n")
-        res = read_entity_csv(spark, p, "node", strict_arity=False)
-        assert res.dropped == 1
-        assert res.df.count() == 2
-
-    def test_custom_separator(self, spark, tmp_path):
-        p = self._write(tmp_path, "pipe.csv", "a|b\n1|x\n")
-        res = read_entity_csv(spark, p, "node", separator="|")
-        assert [tuple(r) for r in res.df.collect()] == [("1", "x")]
 
 
 # ---------------------------------------------------------------------------
@@ -1384,7 +1334,10 @@ class TestCatalogDeltaAppend:
         stream = spark.readStream.schema(schema).parquet(str(src / "*"))
         q = stream_documents_to_graph(
             stream, dim, cat, checkpoint_dir=str(tmp_path / "sckpt"))
-        q.awaitTermination(120)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
         n1 = cat.read("triples_stream").count()
         assert n1 > 0
         # second batch: new snapshot is a delta, table accumulates
@@ -1393,7 +1346,10 @@ class TestCatalogDeltaAppend:
         stream = spark.readStream.schema(schema).parquet(str(src / "*"))
         q2 = stream_documents_to_graph(
             stream, dim, cat, checkpoint_dir=str(tmp_path / "sckpt"))
-        q2.awaitTermination(120)
+        try:
+            q2.awaitTermination(120)
+        finally:
+            q2.stop()
         snaps = cat.snapshots("triples_stream")
         assert snaps[-1]["mode"] == "delta"
         assert cat.read("triples_stream").count() > n1
@@ -1496,7 +1452,10 @@ class TestStreamingAutoCompact:
             q = stream_documents_to_graph(
                 stream, dim, cat, checkpoint_dir=str(tmp_path / "acckpt"),
                 compact_every=2)
-            q.awaitTermination(120)
+            try:
+                q.awaitTermination(120)
+            finally:
+                q.stop()
             counts.append(cat.read("triples_stream").count())
         assert counts[0] < counts[1] < counts[2]  # accumulates
         entry = cat._manifest()["tables"]["triples_stream"]

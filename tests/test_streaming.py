@@ -57,7 +57,10 @@ def test_stream_to_graph_available_now(spark, tmp_path):
         spark.read.parquet(out + ".tmp").write.mode("overwrite").parquet(out)
 
     q = stream_events_to_graph(stream, apply_batch, checkpoint_dir=ckpt)
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
 
     final = {r.ext_id: r.last_event for r in spark.read.parquet(out).collect()}
     assert final == {"u1": "upgrade", "u2": "signup", "u3": "signup"}
@@ -100,7 +103,10 @@ class TestStatefulSessionize:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            try:
+                q.awaitTermination(120)
+            finally:
+                q.stop()
             return got
 
         # run 1: u1 at 0,10; u2 at 0
@@ -151,7 +157,10 @@ class TestWatermarkWindowedAgg:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            try:
+                q.awaitTermination(120)
+            finally:
+                q.stop()
 
         # run 1: window-0 events at 0:00,0:20; 2:00 event pushes the
         # watermark to 1:50 -> window 0 finalizes with n=2
@@ -224,7 +233,10 @@ class TestStreamingKgIngestion:
                 stream, dim, cat,
                 checkpoint_dir=str(tmp_path / "ckpt"),
             )
-            q.awaitTermination(120)
+            try:
+                q.awaitTermination(120)
+            finally:
+                q.stop()
 
         b1.coalesce(1).write.parquet(str(src / "b1"))
         run_once()
@@ -288,7 +300,10 @@ class TestStreamingKgIngestion:
                     checkpoint_dir=str(tmp_path / f"{name}_ckpt"),
                     dedup_exact=dedup,
                 )
-                q.awaitTermination(120)
+                try:
+                    q.awaitTermination(120)
+                finally:
+                    q.stop()
 
             b1.coalesce(1).write.parquet(str(src / "b1"))
             once()
@@ -353,7 +368,10 @@ class TestChunkOrderSessionize:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            try:
+                q.awaitTermination(120)
+            finally:
+                q.stop()
             assert got[1] == (2, 6)
         finally:
             spark.conf.set(
@@ -398,7 +416,10 @@ class TestSessionizeCustomKeyColumn:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
         assert got == {"dev-a": (2, 2), "dev-b": (1, 1)}
 
     def test_tws_schema_derivation(self, spark):
@@ -438,7 +459,10 @@ class TestStreamingDedup:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
 
     def test_cross_batch_suppression_min_id_survives(self, spark, tmp_path):
         """Within a batch the min-id row of a duplicate-content group
@@ -518,7 +542,10 @@ class TestStreamingDedup:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
         assert sorted(emitted) == [10, 30]
 
     def test_ttl_expires_state_and_reemits(self, spark, tmp_path):
@@ -593,7 +620,10 @@ class TestStatelessCurationOnStreams:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
         batch = {(r["doc_id"], r["text"])
                  for r in xform(spark.read.parquet(str(src / "*"))).collect()}
         assert set(out) == batch and len(out) == len(batch)
