@@ -8,8 +8,7 @@ encoder; this package generalizes it into a distributed pipeline:
 - ``kernel``      per-cell type inference / enforced casting with exact
                   parity to the reference's rules (entity_file.py:33-176)
 - ``schema``      driver-side header planning (name:TYPE, ID namespaces)
-- ``sources``     CSV loader-compat reads + deterministic spans-document
-                  corpus synthesis
+- ``sources``     deterministic spans-document corpus synthesis
 - ``extract``     batched mention detection / triple extraction over
                   interleaved text+media spans (Arrow-vectorized)
 - ``ids``         deterministic dense node-ID assignment + registries

@@ -157,19 +157,16 @@ def assign_ids_after(existing: DataFrame, df: DataFrame,
                      order_cols: List[str], *,
                      id_col: str = "internal_id") -> DataFrame:
     """Number ``df``'s rows densely in ``order_cols`` order, after the
-    largest ``internal_id`` of ``existing`` (from 0 when it has none):
+    largest ``internal_id`` of ``existing`` (from 0 when it is empty):
     the ids an update gives the nodes it creates. Lazy — the start id
     is a one-row aggregate cross-joined in and the rows are numbered by
     one global window, so no job runs before the caller's action;
     update sets are dim-scale (``plans.updater.upsert_nodes``)."""
-    numbered = df.withColumn(
-        id_col, F.row_number().over(Window.orderBy(*order_cols)) - 1)
-    if "internal_id" not in existing.columns:
-        return numbered.withColumn(id_col, F.col(id_col).cast("long"))
     start = existing.agg(
         F.coalesce(F.max("internal_id") + 1, F.lit(0)).alias("_start"))
+    rank = F.row_number().over(Window.orderBy(*order_cols)) - 1
     return (
-        numbered.crossJoin(F.broadcast(start))
-        .withColumn(id_col, (F.col(id_col) + F.col("_start")).cast("long"))
+        df.crossJoin(F.broadcast(start))
+        .withColumn(id_col, (rank + F.col("_start")).cast("long"))
         .drop("_start")
     )
