@@ -58,9 +58,6 @@ _RULES = [
     (re.compile(r"^(.+?) mentions (.+?)\.$"), "mentions", "entity"),
 ]
 
-_MEDIA_RE = re.compile(r"^img://([^/]+)/\d+$")
-
-
 def extract_mentions_from_text(text: str) -> List[tuple]:
     """(subj_surface, pred, obj_surface, obj_kind) for one text span.
     Pure Python — shared by the Spark stage and the pytest oracle."""

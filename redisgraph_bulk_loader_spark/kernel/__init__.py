@@ -5,12 +5,9 @@ from .typing_kernel import (  # noqa: F401
     TAG_LONG,
     TAG_NULL,
     TAG_STRING,
-    TAG_NAMES,
     TypedCell,
     canonical_literal,
     cast_cell,
     encode_cell_binary,
     infer_cell,
-    infer_cells,
-    cast_cells,
 )

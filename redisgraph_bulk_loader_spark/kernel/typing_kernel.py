@@ -1,35 +1,38 @@
 """Per-cell dynamic typing kernel.
 
 This reproduces, from scratch, the observable typing semantics of the
-reference loader's property encoders (studied at
-/root/reference/redisgraph_bulk_loader/entity_file.py:49-176):
+reference loader's property encoders (entity_file.py:49-176).
 
-Inference precedence on the *stripped* cell (``infer_cell``):
+Each value type has one parser (``_long``, ``_double``, ``_bool``,
+``_array``) that takes a stripped non-empty value and returns its
+``TypedCell``, or None when the value does not parse as that type:
 
-1. ``""``                       -> NULL (property absent downstream)
-2. Python ``int(v)``            -> LONG, **unless** the value overflows a
-   signed 64-bit integer, in which case it falls through to the float
-   rule (the reference hits ``struct.error`` packing ``q`` and falls
-   through; entity_file.py:141-145)
-3. Python ``float(v)``, finite  -> DOUBLE (NaN/Inf parse but are
-   rejected and fall through; entity_file.py:147-155)
-4. ``true``/``false`` (case-insensitive) -> BOOL (entity_file.py:157-161)
-5. ``[`` ... ``]``              -> ARRAY via ``ast.literal_eval``; any
-   parse error falls through to string (entity_file.py:163-168).
-   Elements are re-inferred from ``str(elem)`` individually — arrays are
-   heterogeneous and nest (entity_file.py:49-59)
-6. otherwise                    -> STRING (quote characters are literal
-   under the loader's default QUOTE_NONE csv dialect, so ``"30165"``
-   including quotes types as a string)
+- LONG: Python ``int(v)`` that fits a signed 64-bit integer (the
+  reference hits ``struct.error`` packing ``q`` on overflow;
+  entity_file.py:141-145)
+- DOUBLE: Python ``float(v)``, finite only (NaN/Inf parse but are
+  rejected; entity_file.py:147-155)
+- BOOL: ``true``/``false``, case-insensitive (entity_file.py:157-161)
+- ARRAY: ``[`` ... ``]`` through ``ast.literal_eval``; elements are
+  re-inferred from ``str(elem)`` one by one, so arrays are
+  heterogeneous and nest (entity_file.py:49-59, 163-168)
 
-Enforced casting (``cast_cell``) per declared type
-(entity_file.py:64-123): empty cell -> NULL for any type; LONG must
-``int()``-parse AND fit in int64; DOUBLE must ``float()``-parse finite;
-BOOL must be a ``true``/``false`` literal; STRING passes through; ARRAY
-must be bracket-delimited and literal_eval-parse. Violations raise
-``SchemaError``.
+Both typing modes are built from those parsers. An empty (or None)
+cell is NULL in both, and NULL cells become absent property keys.
 
-Everything here is pure Python/pandas — no Spark imports — so it is
+- ``infer_cell`` (schemaless) tries LONG, DOUBLE, BOOL, ARRAY in that
+  order and falls back to STRING, so an int64-overflowing integer
+  types as DOUBLE and quote characters stay literal (under the
+  loader's default QUOTE_NONE dialect ``"30165"``, quotes included, is
+  a string).
+- ``cast_cell`` (enforced schema, entity_file.py:64-123) takes the
+  header's declared ``HType`` — whose value members equal the tags
+  below, with ID_STRING parsed as STRING and ID_INTEGER as LONG — and
+  runs only that type's parser; a value that does not parse raises
+  ``SchemaError``, and so does a non-empty cell of any other declared
+  type (UNKNOWN, START_ID, END_ID, IGNORE).
+
+Everything here is pure Python, with no Spark imports, so it is
 unit-testable standalone; the loader's ``_parse_rows`` calls it per cell
 inside its Arrow-batched ``mapInPandas`` (plans/loader.py).
 """
@@ -40,27 +43,20 @@ import ast
 import json
 import math
 import struct
-from typing import List, NamedTuple, Optional
+from typing import NamedTuple, Optional
 
 from ..exceptions import SchemaError
+from ..schema.header import HType
 
 # Tag values reuse the reference's Type enum numbering
-# (entity_file.py:15-30) so downstream consumers agree on the wire enum.
+# (entity_file.py:15-30), as does HType, so downstream consumers agree
+# on the wire enum.
 TAG_NULL = 0
 TAG_BOOL = 1
 TAG_DOUBLE = 2
 TAG_STRING = 3
 TAG_LONG = 4
 TAG_ARRAY = 5
-
-TAG_NAMES = {
-    TAG_NULL: "null",
-    TAG_BOOL: "bool",
-    TAG_DOUBLE: "double",
-    TAG_STRING: "string",
-    TAG_LONG: "long",
-    TAG_ARRAY: "array",
-}
 
 _INT64_MIN = -(2**63)
 _INT64_MAX = 2**63 - 1
@@ -119,13 +115,56 @@ def canonical_literal(cell: TypedCell) -> str:
 def _parse_array_literal(stripped: str) -> str:
     """Parse a bracket literal with ``ast.literal_eval`` and render the
     canonical form with element-wise re-inference. Raises on parse
-    failure (callers decide whether to fall through or error)."""
+    failure; ``_array`` turns that into "does not parse"."""
     parsed = ast.literal_eval(stripped)
     # The reference accepts any literal_eval result here and iterates
-    # it; tuples/lists both iterate, scalars raise TypeError which the
-    # inferred path swallows (fall to string) and the typed path
-    # propagates as a schema violation.
+    # it; tuples/lists both iterate, scalars raise TypeError.
     return "[" + ",".join(_canon_elem(elem) for elem in parsed) + "]"
+
+
+# One parser per value type. Each takes a stripped non-empty value and
+# returns its TypedCell, or None when the value does not parse as that
+# type; inference and enforced casts are both built from these.
+
+def _long(v: str) -> Optional[TypedCell]:
+    # exact Python int() accept-set (signs, underscores, unicode
+    # digits); int64 overflow does not parse (entity_file.py:141-145)
+    try:
+        n = int(v)
+    except ValueError:
+        return None
+    return TypedCell(TAG_LONG, l=n) if _INT64_MIN <= n <= _INT64_MAX else None
+
+
+def _double(v: str) -> Optional[TypedCell]:
+    # exact Python float() accept-set; NaN/Inf parse but are rejected
+    # (entity_file.py:147-155)
+    try:
+        f = float(v)
+    except ValueError:
+        return None
+    return TypedCell(TAG_DOUBLE, d=f) if math.isfinite(f) else None
+
+
+_BOOL_CELLS = {"true": TypedCell(TAG_BOOL, b=True),
+               "false": TypedCell(TAG_BOOL, b=False)}
+
+
+def _bool(v: str) -> Optional[TypedCell]:
+    return _BOOL_CELLS.get(v.lower())
+
+
+def _array(v: str) -> Optional[TypedCell]:
+    if v[0] != "[" or v[-1] != "]":
+        return None
+    try:
+        return TypedCell(TAG_ARRAY, a=_parse_array_literal(v))
+    except Exception:
+        return None
+
+
+def _string(v: str) -> TypedCell:
+    return TypedCell(TAG_STRING, s=v)
 
 
 def infer_cell(raw: Optional[str]) -> TypedCell:
@@ -135,111 +174,43 @@ def infer_cell(raw: Optional[str]) -> TypedCell:
     v = raw.strip()
     if v == "":
         return NULL_CELL
-    # 1) integer — exact Python int() accept-set (signs, underscores,
-    #    unicode digits); int64 overflow falls through to float.
-    try:
-        n = int(v)
-        if _INT64_MIN <= n <= _INT64_MAX:
-            return TypedCell(TAG_LONG, l=n)
-    except ValueError:
-        pass
-    # 2) finite float — exact Python float() accept-set.
-    try:
-        f = float(v)
-        if not math.isnan(f) and not math.isinf(f):
-            return TypedCell(TAG_DOUBLE, d=f)
-    except ValueError:
-        pass
-    # 3) boolean literal.
-    low = v.lower()
-    if low == "false":
-        return TypedCell(TAG_BOOL, b=False)
-    if low == "true":
-        return TypedCell(TAG_BOOL, b=True)
-    # 4) array literal; any failure falls through to string.
-    if v[0] == "[" and v[-1] == "]":
-        try:
-            return TypedCell(TAG_ARRAY, a=_parse_array_literal(v))
-        except Exception:
-            pass
-    # 5) string.
-    return TypedCell(TAG_STRING, s=v)
+    # A TypedCell is a non-empty tuple, so ``or`` moves on only past None.
+    return _long(v) or _double(v) or _bool(v) or _array(v) or _string(v)
 
 
-# Declared-type names accepted in enforced-schema headers, with aliases
-# (entity_file.py:15-30). Values are the internal tag the cast targets.
-DECLARED_TYPES = {
-    "BOOL": TAG_BOOL,
-    "BOOLEAN": TAG_BOOL,
-    "DOUBLE": TAG_DOUBLE,
-    "FLOAT": TAG_DOUBLE,
-    "STRING": TAG_STRING,
-    "LONG": TAG_LONG,
-    "INT": TAG_LONG,
-    "INTEGER": TAG_LONG,
-    "ARRAY": TAG_ARRAY,
+#: declared header type -> (parser, what the violation message calls it)
+_CASTS = {
+    HType.BOOL: (_bool, "a boolean"),
+    HType.DOUBLE: (_double, "a double"),
+    HType.STRING: (_string, None),
+    HType.LONG: (_long, "a long"),
+    HType.ARRAY: (_array, "an array"),
+    HType.ID_STRING: (_string, None),
+    HType.ID_INTEGER: (_long, "a long"),
 }
 
 
-def cast_cell(raw: Optional[str], declared_tag: int) -> TypedCell:
-    """Cast one cell to a declared type; SchemaError on violation.
+def cast_cell(raw: Optional[str], declared: int) -> TypedCell:
+    """Cast one cell to its declared header type (an ``HType``; the
+    value members equal the kernel tags); SchemaError on violation.
 
     Matches typed_prop_to_binary's observable behavior
-    (entity_file.py:64-123): empty -> NULL regardless of type; LONG
-    requires int() parse + int64 range; DOUBLE requires finite float();
-    BOOL requires the literal; ARRAY requires brackets + parseability.
+    (entity_file.py:64-123): empty -> NULL regardless of type, otherwise
+    only the declared type's parser runs.
     """
     if raw is None:
         return NULL_CELL
     v = raw.strip()
     if v == "":
         return NULL_CELL
-    if declared_tag == TAG_LONG:
-        try:
-            n = int(v)
-        except ValueError:
-            raise SchemaError(f"Could not parse '{v}' as a long")
-        if not (_INT64_MIN <= n <= _INT64_MAX):
-            raise SchemaError(f"Could not parse '{v}' as a long")
-        return TypedCell(TAG_LONG, l=n)
-    if declared_tag == TAG_DOUBLE:
-        try:
-            f = float(v)
-        except ValueError:
-            raise SchemaError(f"Could not parse '{v}' as a double")
-        if math.isnan(f) or math.isinf(f):
-            raise SchemaError(f"Could not parse '{v}' as a double")
-        return TypedCell(TAG_DOUBLE, d=f)
-    if declared_tag == TAG_BOOL:
-        low = v.lower()
-        if low == "false":
-            return TypedCell(TAG_BOOL, b=False)
-        if low == "true":
-            return TypedCell(TAG_BOOL, b=True)
-        raise SchemaError(f"Could not parse '{v}' as a boolean")
-    if declared_tag == TAG_STRING:
-        return TypedCell(TAG_STRING, s=v)
-    if declared_tag == TAG_ARRAY:
-        if v[0] != "[" or v[-1] != "]":
-            raise SchemaError(f"Could not parse '{v}' as an array")
-        try:
-            return TypedCell(TAG_ARRAY, a=_parse_array_literal(v))
-        except Exception:
-            raise SchemaError(f"Could not parse '{v}' as an array")
-    raise SchemaError(f"unsupported declared type tag {declared_tag}")
-
-
-# ---------------------------------------------------------------------------
-# Batch entry points (what the pandas UDFs call): list-in/list-out so
-# the Arrow batch stays in one Python call.
-# ---------------------------------------------------------------------------
-
-def infer_cells(values) -> List[TypedCell]:
-    return [infer_cell(v) for v in values]
-
-
-def cast_cells(values, declared_tag: int) -> List[TypedCell]:
-    return [cast_cell(v, declared_tag) for v in values]
+    try:
+        parse, what = _CASTS[declared]
+    except KeyError:
+        raise SchemaError(f"unsupported declared type tag {declared}") from None
+    cell = parse(v)
+    if cell is None:
+        raise SchemaError(f"Could not parse '{v}' as {what}")
+    return cell
 
 
 # ---------------------------------------------------------------------------

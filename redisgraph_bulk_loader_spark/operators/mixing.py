@@ -148,43 +148,14 @@ def stratified_quota_sample(
     md5(stratum:id) values — the per-source quota step of a data-mixing
     recipe, reproducible across runs and cluster layouts.
 
-    Two-phase exact top-k: a naive row_number over
-    ``partitionBy(stratum)`` sends every row of a stratum to ONE
-    reducer — at web scale a 10^11-row stratum is a single-task sort.
-    Phase 1 ranks within (stratum, salt-of-id) so each task holds
-    ~1/n_salts of the stratum; only the <= quota * n_salts phase-1
-    winners per stratum reach the phase-2 window. Every global winner
-    is within the top-quota of its own salt bucket, so the composition
-    is exact, and the output is salt-count-invariant (n_salts tunes
-    parallelism, never results).
-
-    Only (stratum, id, ordering-hash) rides the window shuffles —
-    document text/payload columns stay in the scan and rejoin via an
-    id semi-join at the end (winner sets are quota-bounded, so AQE
-    broadcasts them). ``id_col`` must be unique per row (it already
-    has to be for the deterministic ordering to mean anything)."""
-    ord_key = F.md5(
-        F.concat(
-            F.col(strata_col).cast("string"),
-            F.lit(":"),
-            F.col(id_col).cast("string"),
-        )
-    )
-    keys = df.select(strata_col, id_col).withColumn(
-        "_ord", ord_key
-    ).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_salts))
-    )
-    w1 = Window.partitionBy(strata_col, "_salt").orderBy("_ord", id_col)
-    w2 = Window.partitionBy(strata_col).orderBy("_ord", id_col)
-    winners = (
-        keys.withColumn("_rk", F.row_number().over(w1))
-        .filter(F.col("_rk") <= quota)
-        .withColumn("_rk", F.row_number().over(w2))
-        .filter(F.col("_rk") <= quota)
-        .select(id_col)
-    )
-    return df.join(winners, id_col, "semi")
+    This is ``token_budget_sample`` with unit weights: a row's running
+    count in hash order is its rank, so "running count <= quota" is
+    exactly "rank <= quota", and the same two-phase fill gives an exact
+    top-k without sending a whole stratum to one reducer (phase 2 sees
+    at most quota * n_salts rows per stratum). ``id_col`` must be
+    unique per row (it already has to be for the deterministic ordering
+    to mean anything)."""
+    return _hash_order_fill(df, strata_col, id_col, F.lit(1), quota, n_salts)
 
 
 def token_budget_sample(
@@ -203,24 +174,47 @@ def token_budget_sample(
     "sample 1B tokens per source" step of a training-data recipe —
     quota counts rows, budget counts tokens/bytes.
 
-    Exact two-phase decomposition (same narrow-projection discipline as
-    stratified_quota_sample): the global budget prefix intersected with
-    any salt bucket is a prefix of that bucket's own hash order whose
-    weight sum is <= budget — so phase 1 keeps each (stratum, salt)
-    bucket's hash-order prefix up to and INCLUDING its first
-    overshooting row (bounding phase-2 input to ~n_salts * (budget +
-    max row weight) per stratum), and phase 2 re-ranks the survivors
-    per stratum and applies the exact global cumulative cut. Keeping
-    the first overshooter matters: every phase-1-dropped row then has
-    bucket (hence global) prefix-before >= budget, so no dropped row
-    can precede a phase-2 winner and phase 2's running sum equals the
-    true global one.
-    Only (stratum, id, ord, weight) rides the shuffles; full rows
-    rejoin via the winner id semi-join. Rows with weight > budget can
-    never be kept. Weights must be non-negative — the decomposition's
-    exactness proof relies on the running sum being monotone, so
-    negative weights give undefined results (as they would make "fill
-    a budget" meaningless anyway)."""
+    Rows with weight > budget can never be kept. Weights must be
+    non-negative — the two-phase fill's exactness proof relies on the
+    running sum being monotone, so negative weights give undefined
+    results (as they would make "fill a budget" meaningless anyway)."""
+    return _hash_order_fill(
+        df, strata_col, id_col, F.col(weight_col), budget, n_salts)
+
+
+def _hash_order_fill(
+    df: DataFrame,
+    strata_col: str,
+    id_col: str,
+    weight: Column,
+    budget: int,
+    n_salts: int,
+) -> DataFrame:
+    """Rows of ``df`` whose running ``weight`` sum in md5(stratum:id)
+    order stays <= ``budget`` within their stratum.
+
+    Exact two-phase decomposition: a naive window over
+    ``partitionBy(stratum)`` sends every row of a stratum to ONE
+    reducer — at web scale a 10^11-row stratum is a single-task sort.
+    The global budget prefix intersected with any salt-of-id bucket is
+    a prefix of that bucket's own hash order whose weight sum is <=
+    budget — so phase 1 keeps each (stratum, salt) bucket's hash-order
+    prefix up to and INCLUDING its first overshooting row (bounding
+    phase-2 input to ~n_salts * (budget + max row weight) per stratum),
+    and phase 2 re-ranks the survivors per stratum and applies the
+    exact global cumulative cut. Keeping the first overshooter matters:
+    every phase-1-dropped row then has bucket (hence global)
+    prefix-before >= budget, so no dropped row can precede a phase-2
+    winner and phase 2's running sum equals the true global one. (A
+    `_cum <= budget` phase-1 filter could drop a bucket's first
+    overshooting row while a later row in global order survived
+    elsewhere, giving n_salts-dependent output; ADVICE r5.) The output
+    is salt-count-invariant: n_salts tunes parallelism, never results.
+
+    Only (stratum, id, ord, weight) rides the window shuffles —
+    document text/payload columns stay in the scan and rejoin via an
+    id semi-join at the end (winner sets are budget-bounded, so AQE
+    broadcasts them)."""
     ord_key = F.md5(
         F.concat(
             F.col(strata_col).cast("string"),
@@ -229,7 +223,7 @@ def token_budget_sample(
         )
     )
     keys = df.select(
-        strata_col, id_col, F.col(weight_col).alias("_w")
+        strata_col, id_col, weight.alias("_w")
     ).withColumn("_ord", ord_key).withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_salts))
     )
@@ -243,17 +237,6 @@ def token_budget_sample(
         .orderBy("_ord", id_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # Phase 1 keeps each bucket's prefix INCLUDING its first
-    # overshooter (prefix-before-this-row < budget), not just rows
-    # whose own cumulative fits. Any row dropped here has bucket
-    # prefix-before >= budget, hence GLOBAL prefix-before >= budget,
-    # so it can never precede a phase-2 winner — which makes phase 2's
-    # cumulative equal the true global cumulative and the
-    # decomposition exact. The old `_cum <= budget` phase-1 filter
-    # could drop a bucket's first overshooting row while a later row
-    # in global order survived elsewhere, undercounting phase 2's
-    # running sum and keeping rows past the first overshoot
-    # (n_salts-dependent output; ADVICE r5).
     winners = (
         keys.withColumn("_cum", F.sum("_w").over(w1))
         .filter((F.col("_cum") - F.col("_w")) < budget)

@@ -50,12 +50,6 @@ from ..ids import assign_dense_ids, detect_duplicates
 from ..kernel.typing_kernel import TAG_NULL, canonical_literal, cast_cell, infer_cell
 from ..schema import ColumnPlan, HType, parse_header
 
-_TYPE_TAG = {
-    HType.BOOL: 1, HType.DOUBLE: 2, HType.STRING: 3, HType.LONG: 4,
-    HType.ARRAY: 5, HType.ID_STRING: 3, HType.ID_INTEGER: 4,
-}
-
-
 #: (row_idx, cells): one csv record per row, numbered from 0 with the
 #: header as record 0 — the shape every reader below returns
 _CELLS_SCHEMA = StructType([
@@ -482,7 +476,7 @@ def _parse_rows(
                 for off, name, htype in prop_cols:
                     raw = row[off]
                     if enforce:
-                        cell = cast_cell(raw, _TYPE_TAG[htype])
+                        cell = cast_cell(raw, htype)
                     else:
                         cell = infer_cell(raw)
                     if cell.t != TAG_NULL:

@@ -13,9 +13,10 @@ Spark mapping:
   (``loader._record_source``) under ``Config``'s default dialect, which
   is the updater's (bulk_update.py:82-104), with ``cells`` renamed to
   the row variable.
-- ``quote_cell``: the documented *intent* of quote_string — numerics,
-  booleans, and bracketed arrays pass through; everything else (not
-  already quoted) is double-quoted. (The reference contains a real bug
+- ``quote_col``: the documented *intent* of quote_string — numerics
+  (ASCII decimal literals only), booleans, and bracketed arrays pass
+  through, an empty cell is ``null``; everything else (not already
+  quoted) is double-quoted. (The reference contains a real bug
   — ``cell.lower != "]"`` compares a bound method, always truthy
   (bulk_update.py:67) — we implement the documented intent, not the
   bug.)
@@ -40,34 +41,9 @@ from ..streaming.stream import incremental_graph_update
 from .loader import _record_source
 
 
-def _is_numeric(v: str) -> bool:
-    try:
-        float(v)
-        return True
-    except ValueError:
-        return False
-
-
-def quote_cell(cell: str) -> str:
-    """Render one CSV cell as a literal for the row-parameter list."""
-    v = cell.strip()
-    if v == "":
-        return "null"
-    if _is_numeric(v):
-        return v
-    if v.lower() in ("true", "false"):
-        return v.lower()
-    if v.startswith("[") and v.endswith("]"):
-        return v
-    if (v.startswith('"') and v.endswith('"')) or (
-        v.startswith("'") and v.endswith("'")
-    ):
-        return v
-    return f'"{v}"'
-
-
 def quote_col(col):
-    """JVM-side column form of quote_cell (whole-stage-codegen path)."""
+    """Render one CSV cell column as a literal for the row-parameter
+    list (whole-stage-codegen path)."""
     v = F.trim(col)
     numeric = v.rlike(r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$")
     boolean = F.lower(v).isin("true", "false")

@@ -37,8 +37,8 @@ from ..exceptions import CSVError, SchemaError
 
 class HType(IntEnum):
     """Header column types; values match the reference Type enum
-    (entity_file.py:15-30). Value types 1-5 share numbering with the
-    kernel's tags."""
+    (entity_file.py:15-30). Value types 1-5 equal the kernel's tags, and
+    ``kernel.cast_cell`` takes a member as the declared type."""
 
     UNKNOWN = 0
     BOOL = 1

@@ -25,21 +25,17 @@ from pyspark.sql import DataFrame
 
 
 def _session_output_schema(events: DataFrame, user_col: str):
-    """(output StructType, key StructField) for the sessionizers: the
-    key field keeps ``user_col``'s name and input type (ADVICE r3 — a
-    hardcoded 'user_id long' mislabels renamed columns and breaks
-    Arrow conversion for string-typed ids)."""
+    """Output StructType for the sessionizers: the key field keeps
+    ``user_col``'s name and input type (ADVICE r3 — a hardcoded
+    'user_id long' mislabels renamed columns and breaks Arrow
+    conversion for string-typed ids)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    key_field = StructField(user_col, events.schema[user_col].dataType)
-    return (
-        StructType([
-            key_field,
-            StructField("n_sessions", LongType()),
-            StructField("n_events", LongType()),
-        ]),
-        key_field,
-    )
+    return StructType([
+        StructField(user_col, events.schema[user_col].dataType),
+        StructField("n_sessions", LongType()),
+        StructField("n_events", LongType()),
+    ])
 
 
 def sessionize_stream(
@@ -60,7 +56,7 @@ def sessionize_stream(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     gap_us = gap_minutes * 60 * 1_000_000
-    out_schema, _key_field = _session_output_schema(events, user_col)
+    out_schema = _session_output_schema(events, user_col)
 
     def fn(key, pdfs: Iterator["pd.DataFrame"], state):
         if state.exists:

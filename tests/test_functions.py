@@ -18,7 +18,7 @@ from redisgraph_bulk_loader_spark.functions.text import (
     quality_score,
     token_count,
 )
-from redisgraph_bulk_loader_spark.plans.updater import quote_cell, quote_col
+from redisgraph_bulk_loader_spark.plans.updater import quote_col
 from redisgraph_bulk_loader_spark.streaming import incremental_graph_update
 
 
@@ -109,21 +109,49 @@ class TestTextFunctions:
 
 
 class TestUpdater:
-    def test_quote_cell(self):
-        # bulk_update.py:59-74 documented intent
-        assert quote_cell("5") == "5"
-        assert quote_cell("1.5") == "1.5"
-        assert quote_cell("True") == "true"
-        assert quote_cell("string") == '"string"'
-        assert quote_cell("[1, 'nested_str']") == "[1, 'nested_str']"
-        assert quote_cell('"already"') == '"already"'
-        assert quote_cell("") == "null"
+    # (cell, literal): bulk_update.py:59-74 documented intent.
+    QUOTE_CELL_CASES = [
+        ("5", "5"),
+        ("1.5", "1.5"),
+        ("-3e2", "-3e2"),
+        (" 7 ", "7"),
+        ("True", "true"),
+        ("string", '"string"'),
+        ("[1, 'nested_str']", "[1, 'nested_str']"),
+        ("[1, 'x']", "[1, 'x']"),
+        ('"already"', '"already"'),
+        ('"q"', '"q"'),
+        ("'s'", "'s'"),
+        ("", "null"),
+    ]
+    # Only ASCII decimal literals count as numeric, so the spellings
+    # Python's float()/int() also accept (nan, inf, underscores,
+    # non-ASCII digits) are quoted as strings.
+    NON_DECIMAL_CASES = [
+        ("nan", '"nan"'),
+        ("inf", '"inf"'),
+        ("-Infinity", '"-Infinity"'),
+        ("1_000", '"1_000"'),
+        ("\u0661\u0662", '"\u0661\u0662"'),
+    ]
+
+    @staticmethod
+    def _quote(spark, cells):
+        df = spark.createDataFrame([(c,) for c in cells], "c string")
+        return [r.q for r in df.select(quote_col(F.col("c")).alias("q")).collect()]
+
+    def test_quote_cell(self, spark):
+        cells = [c for c, _ in self.QUOTE_CELL_CASES]
+        got = self._quote(spark, cells)
+        assert list(zip(cells, got)) == self.QUOTE_CELL_CASES
 
     def test_quote_col_matches_quote_cell(self, spark):
-        vals = ["5", "1.5", "True", "string", "[1, 'x']", '"q"', "", "-3e2"]
-        df = spark.createDataFrame([(v,) for v in vals], "c string")
-        got = [r.q for r in df.select(quote_col(F.col("c")).alias("q")).collect()]
-        assert got == [quote_cell(v) for v in vals]
+        """The non-decimal numeric spellings stay strings beside the
+        documented cases."""
+        cases = self.QUOTE_CELL_CASES + self.NON_DECIMAL_CASES
+        cells = [c for c, _ in cases]
+        got = self._quote(spark, cells)
+        assert list(zip(cells, got)) == cases
 
 
 class TestUpdater100k:

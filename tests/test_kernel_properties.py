@@ -89,6 +89,32 @@ def test_long_cast_agrees_with_python_int(s):
         assert raised
 
 
+_VALUE_TAGS = (TAG_BOOL, TAG_DOUBLE, TAG_STRING, TAG_LONG, TAG_ARRAY)
+# free text rarely parses as anything but a string, so mix in spellings
+# of every value type (with surrounding space, broken brackets, nan/inf)
+_CELL_TEXT = st.one_of(
+    st.text(max_size=30),
+    st.integers().map(str),
+    st.floats().map(repr),
+    st.sampled_from(["true", " FALSE ", "[1, 'a', [2.5]]", "[", "[1,",
+                     "[]", "nan", "-inf", "1_000", "١٢", " "]),
+)
+
+
+@settings(max_examples=500)
+@given(_CELL_TEXT, st.sampled_from(_VALUE_TAGS))
+def test_cast_is_declared_type_or_null_and_agrees_with_inference(s, t):
+    try:
+        cast = cast_cell(s, t)
+    except SchemaError:
+        cast = None
+    else:
+        assert cast.t in (TAG_NULL, t)
+    inferred = infer_cell(s)
+    if inferred.t == t:
+        assert cast == inferred
+
+
 @settings(max_examples=300)
 @given(st.text(max_size=40))
 def test_binary_encoding_tag_structure(s):

@@ -232,6 +232,23 @@ class TestLoaderSemantics:
             bulk_insert(spark, [(p, None)], config=Config(enforce_schema=True))
         assert "SchemaError" in str(ei.value) or isinstance(ei.value, SchemaError)
 
+    def test_enforced_unknown_column(self, spark, tmp_path):
+        # the header accepts a declared UNKNOWN type and stores the column
+        # as a property, but no value casts to it: an empty cell stays
+        # absent, a non-empty one is a schema violation
+        cfg = Config(enforce_schema=True)
+        ok = _w(tmp_path, "unk.csv", "id:ID,x:UNKNOWN\na,\nb,\n")
+        g = bulk_insert(spark, [(ok, None)], config=cfg)
+        assert sorted(json.loads(r.props_json)["id"]
+                      for r in g.nodes.collect()) == ['"a"', '"b"']
+        assert all("x" not in json.loads(r.props_json)
+                   for r in g.nodes.collect())
+        bad = _w(tmp_path, "unk_bad.csv", "id:ID,x:UNKNOWN\na,\nb,1\n")
+        with pytest.raises(Exception) as ei:
+            bulk_insert(spark, [(bad, None)], config=cfg)
+        assert "SchemaError" in str(ei.value) or isinstance(ei.value, SchemaError)
+        assert "KeyError" not in str(ei.value)
+
     def test_ignore_column_absent(self, spark, tmp_path):
         # test_bulk_loader.py:598-625
         p = _w(tmp_path, "ig.csv",

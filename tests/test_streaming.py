@@ -432,7 +432,8 @@ class TestSessionizeCustomKeyColumn:
 
         events = spark.createDataFrame(
             [], "device string, ts timestamp")
-        out_schema, key_field = _session_output_schema(events, "device")
+        out_schema = _session_output_schema(events, "device")
+        key_field = out_schema.fields[0]
         assert key_field.name == "device"
         assert key_field.dataType.typeName() == "string"
         assert [f.name for f in out_schema.fields] == [
